@@ -1,26 +1,14 @@
-"""Driver contract for the spark-graft builder (PySpark target).
-
-``queries()`` aggregates the engine's query library (pdf_ocr_spark.queries)
-— one entry per implemented operator family from SURVEY.md §2 plus the
-training-data-pipeline operators. ``oracle_sql()`` carries the DuckDB
-twins; extraction-pipeline entries are rows-only (non-SQL kernels).
-"""
+"""Spark entry point: ``entry(spark)`` runs the flagship main-content
+extraction over the sf0.001 documents table."""
 
 from __future__ import annotations
 
 import os
 import sys
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-
-def _registry():
-    from pdf_ocr_spark.queries import ALL_ORACLES, ALL_QUERIES
-
-    return ALL_QUERIES, ALL_ORACLES
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -29,11 +17,3 @@ def entry(spark: SparkSession) -> DataFrame:
     from pdf_ocr_spark.queries.extract_q import flagship
 
     return flagship(spark, "/root/testdata/sf0.001")
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return dict(_registry()[0])
-
-
-def oracle_sql() -> dict[str, str]:
-    return dict(_registry()[1])

@@ -400,8 +400,7 @@ def transposed_pair(pair_id: int, seed: int = DEFAULT_SEED) -> tuple[list, list]
     """A transposed document and its FLAT TWIN (same labels/values,
     rotated layout). The kernel's transposed mapping (docpact
     compress.py:1762-1803 detection + interpret.py:1738-1816 mapping)
-    must make both extract to the SAME span sequence — the x07 oracle's
-    equality gate."""
+    must make both extract to the SAME span sequence."""
     r = _rng(f"pairt-{pair_id}", seed)
     labels = ["Vessel", "Port", "Tonnage", "ETA", "Grade"][: r.randint(3, 5)]
     values = [f"{r.randint(1, 9)},{r.randint(100, 999)}" for _ in labels]
@@ -430,7 +429,7 @@ def multirow_pair(pair_id: int, seed: int = DEFAULT_SEED) -> tuple[list, list]:
     (each 2-row record collapsed to one row, same cell texts space-
     joined in the overlapping columns). The kernel's periodicity merge
     (docpact compress.py:1390-1466) must extract both to the SAME span
-    sequence — the x08 oracle's equality gate."""
+    sequence."""
     r = _rng(f"pairm-{pair_id}", seed)
     ncols = r.randint(3, 5)
     # evenly spaced — see transposed_pair
@@ -535,7 +534,7 @@ def stacked_pair(pair_id: int, seed: int = DEFAULT_SEED) -> tuple[list, list]:
     carries the pre-stacked compound " / " names. The kernel's
     bounds-overlap assignment (_build_stacked_headers,
     compress.py:1549-1644) must make both extract to the SAME span
-    sequence — the 'stacked' family of the twin-suite oracle (x12).
+    sequence.
 
     Geometry (cw=10): 4 columns 170 units apart. Group label 1 starts
     AT column 0 (start-aligned — this is what admits the row into the
@@ -707,8 +706,8 @@ _SAFE_WORDS = [w for w in _WORDS if w not in ("vessel", "port", "cargo")]
 def styled_doc(i: int, seed: int = DEFAULT_SEED) -> tuple[list[tuple], dict]:
     """A style-signaled document PLUS its generator ground truth — the
     expected per-kind span counts, computed from how the doc was BUILT,
-    independent of any kernel (x09's oracle embeds these as SQL
-    constants; golden tests assert exact sequences). Four archetypes
+    independent of any kernel (golden tests assert exact sequences).
+    Four archetypes
     that only extract correctly via the style/visual channel:
 
       i%5==0  FH2: two bold all-word header rows over all-word data
@@ -886,8 +885,7 @@ def reheader_pair(pair_id: int, seed: int = DEFAULT_SEED) -> tuple[list, list]:
     global column order — its data cells must re-emit in GLOBAL header
     order (docpact interpret.py:1185-1240 Phase A name-matched column
     remap) — and its FLAT TWIN carrying every row in global order with
-    no re-header. The 'reheader' family of the twin-suite oracle
-    (x14)."""
+    no re-header."""
     r = _rng(f"pairr-{pair_id}", seed)
     ncols = r.randint(3, 4)
     cols = [10 + 170 * ci for ci in range(ncols)]
@@ -1086,11 +1084,11 @@ def _gen_flow(doc_id: str, r: random.Random) -> list[tuple]:
 
 
 # --------------------------------------------------- generator ground truth
-# The x09 pattern (styled_doc) extended to the html/boxes/mixed families
-# per the round-2 review: each function builds a document AND its exact
-# expected OUTPUT span sequence from construction knowledge alone — no
-# kernel is consulted — so the driver oracle can embed the expectations
-# as SQL constants and the flagship extraction entries hash-match.
+# The styled_doc pattern extended to the html/boxes/mixed families: each
+# function builds a document AND its exact expected OUTPUT span sequence
+# from construction knowledge alone — no kernel is consulted — so
+# tests/test_extract_truth.py checks the Spark pipeline against truth
+# the shared kernels cannot have produced.
 
 # value-coercion outcomes (docpact serialize.py:435-495; the same table
 # the mixed generator exercises — outcomes fixed by the REFERENCE spec,

@@ -36,12 +36,23 @@ def _bucketed(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Existence probe through the Hadoop FileSystem of the session's
+    configuration — the same path resolution the parquet reader uses."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+
+
 def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
-    try:
-        ledger = spark.read.parquet(f"{out_dir}/_progress")
-    except Exception:
+    """Buckets with a ledger row. No ledger means a fresh run; a ledger
+    that exists but cannot be read raises. The schema is given, so a
+    ledger holding only a killed first append's ``_temporary`` reads as
+    empty instead of failing schema inference."""
+    path = f"{out_dir}/_progress"
+    if not path_exists(spark, path):
         return set()
-    return {r.bucket for r in ledger.select("bucket").distinct().collect()}
+    ledger = spark.read.schema("bucket int").parquet(path)
+    return {r.bucket for r in ledger.distinct().collect()}
 
 
 def run_resumable(

@@ -92,9 +92,9 @@ def compact_output(
             "nothing to compact (run extraction first)"
         )
     df = spark.read.parquet(data)
-    # one action for both stats (row count + bucket ceiling) — the
-    # count resolves from parquet footer metadata, and collapsing the
-    # two collects halves this job's fixed serial action cost
+    # one action for both stats (row count + bucket ceiling): the
+    # aggregate still runs a scan job over the tree; collapsing the two
+    # collects into one job halves this step's fixed action cost
     stats = df.agg(
         F.count(F.lit(1)).alias("n"), F.max("bucket").alias("mb")
     ).collect()[0]

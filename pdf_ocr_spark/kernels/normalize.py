@@ -9,9 +9,8 @@ Pure-Python re-expression of the reference semantics (NOT a port):
   - value coercion mirrors ``serialize.py:435-495`` (thousand separators,
     EU decimals, accounting negatives, currency strip, yes/no bools).
 
-Each function has a columnar twin in ``pdf_ocr_spark.functions`` built from
-``pyspark.sql.functions`` so the hot path stays JVM-side; these Python
-versions run inside pandas-UDF kernels and the pytest oracle.
+These Python functions run inside the extraction kernels' Python
+workers and in the oracle.
 """
 
 from __future__ import annotations
@@ -123,9 +122,9 @@ def coerce_value(s: str) -> str:
 
 
 # ------------------------------------------------------------- OCR repair
-# Exact Python twin of functions.ocr_repair_col (north_star "OCR-text
-# span recovery"): within number-shaped tokens, map the classic glyph
-# confusions O→0 o→0 l→1 I→1 S→5 B→8; word tokens pass untouched.
+# OCR-text span recovery (north_star stage): within number-shaped
+# tokens, map the classic glyph confusions O→0 o→0 l→1 I→1 S→5 B→8;
+# word tokens pass untouched.
 _OCR_TOKEN_RE = re.compile(r"^[0-9OolISB.,]+$")
 _OCR_HAS_CONFUSABLE = re.compile(r"[0-9OolISB]")
 _OCR_TRANS = str.maketrans("OolISB", "001158")

@@ -1181,7 +1181,7 @@ def extract_page(
                 else:
                     # OCR-text span recovery on recovered table cells:
                     # glyph-confusion repair of number-shaped tokens
-                    # (north_star stage; functions.ocr_repair_col twin)
+                    # (north_star stage; normalize.ocr_repair)
                     cells = texts
                     perm = reheader_perm.get(idx)
                     if perm is not None and len(perm) == len(cells):

@@ -24,9 +24,7 @@ long-format cell stream:
            one record per (data row x group): shared cells + the
            group's dimension header-values + constants + measure cells.
 
-Composed elsewhere / opt-in: title constant-dims are
-`schema_map.match_title_dims` (h03); section-label columns are the
-§2.7 semi-join family; blank-header inference (interpret.py:1440-1460)
+Composed elsewhere / opt-in: blank-header inference (interpret.py:1440-1460)
 is :func:`infer_blank_header_shared`; the re-classify branch for
 measure-less compound label columns (1504-1526) is
 :func:`reclassify_label_columns` — inherently sequential per document
@@ -214,8 +212,8 @@ def infer_blank_header_shared(
     string-type schema column has no header match anywhere in the doc,
     the two are assigned — an extra shared column. Returns
     (doc_id, col_idx, canonical) rows; empty when either gate fails.
-    Title-matched dimensions are composed separately (h03) and are not
-    in the already-matched set here (documented deviation).
+    Title-matched dimensions are not in the already-matched set here
+    (documented deviation).
 
     One narrow pass over the cell stream (broadcast-restricted to
     candidate columns, then a header-grain agg); everything else is

@@ -51,31 +51,6 @@ def norm_header_py(s: str) -> str:
     return s.strip()
 
 
-_YEAR_TMPL = re.compile(r"\{YYYY([+-]\d+)?\}")
-
-
-def resolve_year_templates(schema: dict, pivot_year: int) -> dict:
-    """Driver-side contract prep (docpact contracts.py:192-219 semantics):
-    aliases containing ``{YYYY}`` / ``{YYYY±n}`` templates are resolved
-    against the document's pivot year before the alias table is built —
-    e.g. alias "{YYYY-1} tonnage" with pivot 1996 becomes "1995 tonnage".
-    Non-template aliases pass through untouched; the template alias itself
-    is replaced (a literal "{YYYY}" never reaches the matcher)."""
-    out: dict = {}
-    for canonical, aliases in schema.items():
-        resolved = []
-        for a in aliases:
-            if _YEAR_TMPL.search(a):
-                def _sub(m):
-                    off = int(m.group(1) or 0)
-                    return str(pivot_year + off)
-                resolved.append(_YEAR_TMPL.sub(_sub, a))
-            else:
-                resolved.append(a)
-        out[canonical] = resolved
-    return out
-
-
 def merge_semantic_aliases(schema: dict, resolved: dict) -> dict:
     """Additive semantic-alias enrichment (docpact pipeline.py:194-202 +
     semantics.py:63-65 semantics): ontology-resolved aliases merge into
@@ -97,35 +72,6 @@ def merge_semantic_aliases(schema: dict, resolved: dict) -> dict:
                 seen.add(alias.lower())
         out[canonical] = merged
     return out
-
-
-def coverage_report(mapped: DataFrame, schema: dict) -> DataFrame:
-    """Preflight header-coverage report (docpact semantics.py:202-297):
-    for every canonical schema column, how many of the document's headers
-    resolved to it — including zero-coverage columns (the reference's
-    informational "these schema columns have no source header" warning).
-    One tiny agg over the map_headers output + a broadcast right side."""
-    spark = mapped.sparkSession
-    cols = spark.createDataFrame(
-        [(c,) for c in schema], "canonical string"
-    )
-    counts = (
-        mapped.filter(F.col("canonical").isNotNull())
-        .groupBy("canonical")
-        .agg(F.count("*").alias("n_headers"))
-    )
-    # broadcast the aggregated (build) side: Spark cannot build the
-    # PRESERVED side of a left-outer join, so hinting `cols` would be
-    # silently ignored (HintErrorLogger warnings)
-    return (
-        cols
-        .join(F.broadcast(counts), "canonical", "left")
-        .select(
-            "canonical",
-            F.coalesce("n_headers", F.lit(0).cast("long")).alias("n_headers"),
-            (F.coalesce("n_headers", F.lit(0)) > 0).alias("covered"),
-        )
-    )
 
 
 def alias_table(spark: SparkSession, schema: dict) -> DataFrame:
@@ -193,59 +139,4 @@ def map_headers(headers: DataFrame, aliases: DataFrame) -> DataFrame:
         .when(F.col("c2").isNotNull(), "part")
         .when(F.col("c3").isNotNull(), "joined")
         .alias("match_via"),
-    )
-
-
-def match_title_dims(
-    titles: DataFrame, aliases: DataFrame, dim_cols: set[str]
-) -> DataFrame:
-    """Title -> constant-dimension match (docpact interpret.py:1388-1424
-    semantics): a table title that matches a DIMENSION-type schema
-    column's alias assigns that column as a constant dimension for every
-    record (e.g. title "RICE" matching Crop alias "rice" -> Crop="RICE").
-    Exact normalized match first; when it yields nothing, the fallback
-    accepts an alias (>= 3 chars) appearing as a word-boundary substring
-    of the title. BOTH passes require exactly one candidate column —
-    ambiguity means no match (the reference's len == 1 gates).
-
-    titles(title) -> (title, canonical, match_via) with match_via in
-    {'title', 'substring', null}. The alias side is a contract's worth
-    of rows (KBs -> broadcast); the substring pass is a LIKE-predicate
-    broadcast nested-loop against that tiny dictionary only — the big
-    title stream is never self-joined. Word boundaries are space
-    boundaries post-normalization (the reference's \\b over its
-    normalized form)."""
-    dims = aliases.filter(F.col("canonical").isin(list(dim_cols)))
-    n = titles.select(
-        "title", norm_header(F.col("title")).alias("norm")
-    ).distinct()
-    exact = (
-        n.join(F.broadcast(dims), n["norm"] == dims["norm_alias"])
-        .groupBy("title")
-        .agg(F.array_sort(F.collect_set("canonical")).alias("ec"))
-    )
-    subs = (
-        n.join(
-            F.broadcast(dims.filter(F.length("norm_alias") >= 3)),
-            F.expr(
-                "concat(' ', norm, ' ') LIKE concat('% ', norm_alias, ' %')"
-            ),
-        )
-        .groupBy("title")
-        .agg(F.array_sort(F.collect_set("canonical")).alias("sc"))
-    )
-    return (
-        titles.join(exact, "title", "left")
-        .join(subs, "title", "left")
-        .select(
-            "title",
-            F.when(F.size("ec") == 1, F.col("ec")[0])
-            .when(F.col("ec").isNull() & (F.size("sc") == 1), F.col("sc")[0])
-            .alias("canonical"),
-            F.when(F.size("ec") == 1, F.lit("title"))
-            .when(
-                F.col("ec").isNull() & (F.size("sc") == 1), F.lit("substring")
-            )
-            .alias("match_via"),
-        )
     )

@@ -109,11 +109,6 @@ def _grid_from_blocked(spans: DataFrame) -> tuple[DataFrame, DataFrame]:
     return hdrs, cells
 
 
-def _block_grid(extracted: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Ordered spans -> (hdrs, cells); see _blocked_spans/_grid_from_blocked."""
-    return _grid_from_blocked(_blocked_spans(extracted))
-
-
 def _mapped_cells(
     spark, hdrs: DataFrame, cells: DataFrame, schema: dict
 ) -> DataFrame:

@@ -1,122 +1,30 @@
-"""Query registry: every module exposes QUERIES (name -> (spark, sf_dir)
+"""Query library: every module exposes QUERIES (name -> (spark, sf_dir)
 -> DataFrame) and ORACLE (name -> DuckDB SQL twin).
 
-Two registries are exported:
-
-  FULL_QUERIES / FULL_ORACLES — every fine-grained query (tests, bench,
-  and ad-hoc verification run these; d03 lives only here: its all-pairs
-  pair stage is the documented demo baseline, d06 is the registered
-  scale path with the identical result set).
-
-  ALL_QUERIES / ALL_ORACLES — the DRIVER registry (what
-  __spark_entry__.queries() exposes). The round driver records a
-  CORRECTNESS row for at most ~50 entries in registry order, so
-  homogeneous families are merged into suites (queries/suites.py) and
-  the registry is kept at <= 50 entries — every operator family gets a
-  driver row.
+FULL_QUERIES / FULL_ORACLES merge the modules below; the plan audit
+(tools/audit_plans.py, tests/test_plan_contracts.py) and the per-module
+tests run these. ``extract_q`` holds the extraction entry points
+(``__spark_entry__.entry``, the contract perfbench runs) and registers
+no query.
 """
 
 from __future__ import annotations
 
 FULL_QUERIES: dict = {}
 FULL_ORACLES: dict = {}
-ALL_QUERIES: dict = {}
-ALL_ORACLES: dict = {}
 
 from . import (  # noqa: E402
     analytics_ext,
-    classify_q,
     dedup,
-    extract_q,
-    fonts_q,
-    functions_q,
     multimodal_q,
-    retrieval_q,
-    schema_map_q,
-    setops_arrays,
     similarity,
     textstats,
     tpch,
     validation_q,
     windows,
 )
-from . import suites  # noqa: E402  (imports the modules above)
 
-for _mod in (tpch, windows, setops_arrays, functions_q, extract_q, dedup,
-             similarity, textstats, multimodal_q, analytics_ext,
-             validation_q, schema_map_q, classify_q, fonts_q, retrieval_q,
-             suites):
+for _mod in (tpch, windows, dedup, similarity, textstats, multimodal_q,
+             analytics_ext, validation_q):
     FULL_QUERIES.update(_mod.QUERIES)
     FULL_ORACLES.update(_mod.ORACLE)
-
-# Driver registry: <= 50 entries, ordered. Names of merged members are
-# documented in each suite's docstring (queries/suites.py).
-DRIVER_REGISTRY = [
-    # relational core (SURVEY §2.1-2.4)
-    "q01_pricing_summary",
-    "q02_filter_project",
-    "q03_revenue_topk",
-    "q04_semi_anti_suite",
-    "q05_dim_join_suite",
-    "q10_range_join",
-    # window-shaped (§2.5-2.6)
-    "q11_latest_order_per_customer",
-    "q12_rank_mode_suite",
-    "q13_event_user_suite",
-    "q14_running_supplier_revenue",
-    "q17_multirow_period",
-    "q37_event_windows_suite",
-    # set ops + arrays (§2.7)
-    "q19_setops_suite",
-    "q22_word_stats",
-    "q23_token_explode_top20",
-    "q24_arrays_overlap_langs",
-    "q25_distinct_suite",
-    # scalar functions (§2.8)
-    "q27_normalize_text",
-    "q28_cell_type_suite",
-    "q29_scalar_suite",
-    "q30_date_roundtrip",
-    "p01_metadata_suite",
-    "p02_color_parse",
-    "q39_number_format",
-    # extraction pipeline (north_rule)
-    "x01_extract_documents",
-    "z01_zone_text",
-    "x02_extract_report_suite",
-    "x07_twin_extract_suite",
-    "x09_style_extract",
-    # dedup family
-    "d01_exact_dedup",
-    "d02_minhash_lsh_dedup",
-    "d04_ngram_jaccard_dedup",
-    "d05_embedding_cosine_dedup",
-    "d06_simhash_suite",
-    # similarity / text / multimodal
-    "s01_similarity_suite",
-    "t01_text_analysis_suite",
-    "t06_term_mining_suite",
-    "m01_media_suite",
-    "m03_frame_sample",
-    # extended analytics
-    "q35_grouping_suite",
-    "t05_winnowing_fingerprints",
-    "q36_melt_part_metrics",
-    "x03_dedup_survivors",
-    "x05_dedup_components",
-    # operational layer: incremental refresh + compaction (round 5)
-    "x21_incremental_refresh",
-    # validation / schema mapping / classification
-    "v01_validation_suite",
-    "r01_report_date_suite",
-    "h01_schema_map_suite",
-    "u01_unpivot_suite",
-    "c01_classify_suite",
-]
-
-for _name in DRIVER_REGISTRY:
-    ALL_QUERIES[_name] = FULL_QUERIES[_name]
-    if _name in FULL_ORACLES:
-        ALL_ORACLES[_name] = FULL_ORACLES[_name]
-
-assert len(ALL_QUERIES) <= 50, "driver registry must stay within 50 entries"

@@ -48,11 +48,9 @@ def dsum_expr(expr, scale: int = 6):
 
 def norm_hash(col="text"):
     """The d01 content key: md5 over whitespace-collapsed, trimmed,
-    lowercased text. THE single definition — batch exact dedup (d01),
-    the streaming dedup-at-ingest key, and the train/val/test leakage
-    audit (t19) all hash through here, so the documented batch/stream
-    key agreement holds by construction (reference: compress.py content
-    fingerprint)."""
+    lowercased text. THE single definition — exact dedup (d01) and the
+    train/val/test leakage audit (t19) both hash through here
+    (reference: compress.py content fingerprint)."""
     return F.md5(F.lower(F.trim(F.regexp_replace(col, r"\s+", " "))))
 
 

@@ -1,9 +1,11 @@
-"""Extraction-pipeline queries (rows-only: kernels are not SQL-expressible).
+"""Extraction entry points over the sf testdata tables (rows-only:
+kernels are not SQL-expressible).
 
 The flagship derives an interleaved span table from the REAL documents
 parquet (sentences → text spans + deterministic media refs, mixed-corpus
 shape), runs the full extraction pipeline, and explodes the ordered
-output spans.
+output spans. ``_X16_CONTRACT`` is the typed contract the contract
+pipeline runs over the synthetic corpus.
 """
 
 from __future__ import annotations
@@ -11,18 +13,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..extract.pipeline import extract
-from ..sources.synthetic import synthetic_corpus
-from .base import spread, t
-
-QUERIES = {}
-ORACLE = {}
 
 
 def _doc_spans_from_documents(spark, sf):
     """documents(text) -> (doc_id, spans) in mixed-corpus shape: one text
     span per sentence-ish chunk, a media span every 4th chunk, sequence
     offsets. Pure column ops (split / posexplode / collect_list)."""
-    docs = t(spark, sf, "documents").select(
+    docs = spark.read.parquet(f"{sf}/documents.parquet").select(
         F.concat(F.lit("mixed-"), F.col("doc_id").cast("string")).alias("doc_id"),
         F.split(F.col("text"), " ").alias("words"),
     )
@@ -57,6 +54,8 @@ def _doc_spans_from_documents(spark, sf):
 
 
 def flagship(spark, sf):
+    """Extract the documents table; one row per output span, carrying
+    the doc's spans_in / spans_out / dropped metrics."""
     inp = _doc_spans_from_documents(spark, sf)
     out = extract(inp)
     return out.select(
@@ -77,475 +76,8 @@ def flagship(spark, sf):
     )
 
 
-QUERIES["x01_extract_documents"] = flagship
-
-# Value-hash oracle for the flagship: on THIS corpus the mixed kernel
-# is provably the identity transform — documents.text is plain
-# single-spaced words (no digits, colons, parens, commas or doubled
-# spaces at any SF, asserted in tests/test_spark_extract.py), so
-# normalization strips nothing, no chunk matches the field pattern,
-# value coercion never fires, and the only field line is the prepended
-# title (required-field gate satisfied, enum gate never triggered).
-# The expected output is therefore pure layout algebra — the title
-# span + the 8-word chunking with every 4th chunk a media span —
-# which DuckDB reproduces exactly from the same parquet.
-_X01_ORACLE = """
-WITH base AS (
-  SELECT 'mixed-' || CAST(doc_id AS VARCHAR) AS doc_id,
-         string_split(text, ' ') AS ws
-  FROM documents
-),
-n AS (
-  SELECT doc_id, ws,
-         CAST(ceil(len(ws) / 8.0) AS INT) AS n_chunks
-  FROM base
-),
-spans AS (
-  SELECT doc_id, n_chunks, 0 AS off, 'text' AS kind,
-         'title: doc ' || doc_id AS text, '' AS media_ref
-  FROM n
-  UNION ALL
-  SELECT doc_id, n_chunks, g.i + 1 AS off,
-         CASE WHEN g.i % 4 = 3 THEN 'media' ELSE 'text' END AS kind,
-         CASE WHEN g.i % 4 = 3 THEN ''
-              ELSE array_to_string(ws[g.i * 8 + 1 : g.i * 8 + 8], ' ')
-         END AS text,
-         CASE WHEN g.i % 4 = 3 THEN 'img://' || doc_id || '/' || g.i
-              ELSE ''
-         END AS media_ref
-  FROM n, LATERAL unnest(generate_series(0, n_chunks - 1)) AS g(i)
-)
-SELECT doc_id,
-       n_chunks + 1 AS spans_in,
-       n_chunks + 1 AS spans_out,
-       0 AS dropped,
-       kind, text, media_ref, off AS offset
-FROM spans
-"""
-ORACLE["x01_extract_documents"] = _X01_ORACLE
-
-
-def x02_extract_synthetic(spark, sf):
-    """Full three-corpus synthetic extraction, summarized per corpus.
-    Deterministic (seeded corpus + deterministic kernels)."""
-    docs = t(spark, sf, "documents")
-    n = docs.count() // 2  # scale corpus with sf tier
-    inp = synthetic_corpus(spark, n, skew_docs=max(1, n // 500))
-    out = extract(inp)
-    return (
-        out.select(
-            F.split("doc_id", "-")[0].alias("corpus"),
-            F.col("metrics.spans_in").alias("spans_in"),
-            F.col("metrics.spans_out").alias("spans_out"),
-            F.col("metrics.dropped").alias("dropped"),
-        )
-        .groupBy("corpus")
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum("spans_in").alias("spans_in"),
-            F.sum("spans_out").alias("spans_out"),
-            F.sum("dropped").alias("dropped"),
-        )
-    )
-
-
-QUERIES["x02_extract_synthetic"] = x02_extract_synthetic
-
-
-def x04_extract_grid(spark, sf):
-    """Grid/spreadsheet-corpus extraction (kernels/gridk.py: merged-cell
-    expansion, hidden row/col skip, aggregation/footnote strip, trailing
-    trim), summarized per drop reason. Deterministic; rows-only check."""
-    from ..corpus import generate_doc
-    from ..extract.pipeline import extract
-    from ..extract.schema import INPUT_SCHEMA, span_dicts
-
-    n = t(spark, sf, "documents").count() // 5
-    ids = [f"grid-{i:06d}" for i in range(max(n, 20))]
-    inp = spark.createDataFrame(
-        [{"doc_id": d, "spans": span_dicts(generate_doc(d))} for d in ids],
-        INPUT_SCHEMA,
-    )
-    out = extract(inp)
-    return (
-        out.select(F.explode("metrics.drop_reasons").alias("reason", "n"))
-        .groupBy("reason")
-        .agg(
-            F.sum("n").alias("dropped"),
-            F.count("*").alias("docs"),
-        )
-    )
-
-
-QUERIES["x04_extract_grid"] = x04_extract_grid
-
-
-# ---------------------------------------------------------------- z01
-_Z01_ORACLE = """
-WITH w AS (
-  SELECT doc_id, ws[pos + 1] AS w, pos
-  FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-       LATERAL unnest(generate_series(0, len(ws) - 1)) AS g(pos)
-),
-z AS (
-  SELECT doc_id, pos, w,
-         CAST(pos / 40 AS INTEGER) AS page,
-         (pos % 40) * 25 AS y
-  FROM w
-),
-zones AS (
-  SELECT doc_id, 'header' AS zone, pos, w FROM z WHERE y < 150
-  UNION ALL
-  SELECT doc_id, 'footer' AS zone, pos, w FROM z WHERE y >= 850
-  UNION ALL
-  SELECT doc_id, 'title' AS zone, pos, w FROM z WHERE page = 0 AND y < 400
-)
-SELECT doc_id, zone, string_agg(w, ' ' ORDER BY pos) AS zone_text
-FROM zones GROUP BY doc_id, zone
-"""
-
-
-def z01_zone_text(spark, sf):
-    """Zone extraction as a scan predicate (docpact retrieval.py:115-164
-    semantics, kernels/pdfish.py:extract_zones twin): documents are laid
-    out on a deterministic 40-words/page grid (y = slot * 25 centipoints)
-    and each zone is a pure band filter — header y < 15 %, footer
-    y >= 85 %, title = page 0 top 40 % — so zone pulls never touch the
-    full extraction path. One shuffle (per-doc-zone ordered agg)."""
-    w = (
-        t(spark, sf, "documents")
-        .select(
-            "doc_id",
-            F.posexplode(F.split("text", " ")).alias("pos", "w"),
-        )
-        .select(
-            "doc_id",
-            "pos",
-            "w",
-            (F.col("pos") / 40).cast("int").alias("page"),
-            ((F.col("pos") % 40) * 25).alias("y"),
-        )
-    )
-    zones = (
-        w.filter(F.col("y") < 150).select(
-            "doc_id", F.lit("header").alias("zone"), "pos", "w"
-        )
-        .unionAll(
-            w.filter(F.col("y") >= 850).select(
-                "doc_id", F.lit("footer").alias("zone"), "pos", "w"
-            )
-        )
-        .unionAll(
-            w.filter((F.col("page") == 0) & (F.col("y") < 400)).select(
-                "doc_id", F.lit("title").alias("zone"), "pos", "w"
-            )
-        )
-    )
-    return zones.groupBy("doc_id", "zone").agg(
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "w"))),
-                lambda s: s["w"],
-            ),
-        ).alias("zone_text")
-    )
-
-
-QUERIES["z01_zone_text"] = z01_zone_text
-ORACLE["z01_zone_text"] = _Z01_ORACLE
-
-
-# ------------------------------------------------------------ x07/x08
-_N_PAIRS = 24
-
-
-def _pair_equality(spark, pair_fn, tag, corpus="pdfish"):
-    """Run a twin-pair corpus through the FULL Spark extraction pipeline
-    and compare the two sides' output span sequences per pair. The
-    ``corpus`` prefix routes each side to its kernel (corpus_of)."""
-    from ..extract.pipeline import extract
-    from ..extract.schema import INPUT_SCHEMA, span_dicts
-
-    rows = []
-    for i in range(_N_PAIRS):
-        a, b = pair_fn(i)
-        rows.append(
-            {"doc_id": f"{corpus}-{tag}a{i:04d}", "spans": span_dicts(a)}
-        )
-        rows.append(
-            {"doc_id": f"{corpus}-{tag}b{i:04d}", "spans": span_dicts(b)}
-        )
-    inp = spark.createDataFrame(rows, INPUT_SCHEMA)
-    seq = extract(inp).select(
-        F.regexp_extract("doc_id", r"(a|b)(\d+)$", 2).cast("long").alias(
-            "pair_id"
-        ),
-        F.regexp_extract("doc_id", r"(a|b)(\d+)$", 1).alias("side"),
-        F.expr(
-            "transform(spans, s -> struct(s.kind as kind, s.text as text,"
-            " s.media_ref as media_ref))"
-        ).alias("seq"),
-    )
-    a = seq.filter(F.col("side") == "a").select(
-        "pair_id", F.col("seq").alias("a_seq")
-    )
-    b = seq.filter(F.col("side") == "b").select(
-        "pair_id", F.col("seq").alias("b_seq")
-    )
-    return a.join(b, "pair_id").select(
-        "pair_id",
-        (F.col("a_seq") == F.col("b_seq")).alias("equal"),
-    )
-
-
-_PAIR_ORACLE = f"""
-SELECT unnest(generate_series(0, {_N_PAIRS - 1})) AS pair_id, true AS equal
-"""
-
-
-def x07_transposed_equivalence(spark, sf):
-    """Transposed-table handling (docpact compress.py:1762-1803 detection
-    + interpret.py:1738-1816 deterministic mapping): every transposed
-    document must extract to the SAME span sequence as its flat twin
-    (same labels/values, rotated layout). The oracle pins equal=true for
-    every pair — a kernel regression (missed detection, wrong record
-    order, label-coverage gate failure) flips rows to false and fails
-    the value hash."""
-    from ..corpus import transposed_pair
-
-    return _pair_equality(spark, transposed_pair, "t")
-
-
-QUERIES["x07_transposed_extract"] = x07_transposed_equivalence
-ORACLE["x07_transposed_extract"] = _PAIR_ORACLE
-
-
-def x08_multirow_equivalence(spark, sf):
-    """Multi-row record merge (docpact compress.py:1390-1466): a period-2
-    record document must extract to the SAME span sequence as its
-    pre-merged twin (each record's rows collapsed, overlapping columns
-    space-joined). Oracle pins equal=true per pair."""
-    from ..corpus import multirow_pair
-
-    return _pair_equality(spark, multirow_pair, "m")
-
-
-QUERIES["x08_multirow_extract"] = x08_multirow_equivalence
-ORACLE["x08_multirow_extract"] = _PAIR_ORACLE
-
-
-def x10_width_split_equivalence(spark, sf):
-    """Span splitting via the width channel (docpact compress.py:948-1032
-    + median char width spatial_text.py:297-308): a document whose data
-    rows carry PDF-merged two-cell spans — with rendered widths riding
-    the style token ("st:@<w>") — must extract to the SAME span sequence
-    as its unmerged twin. Without the width signal the merged cells
-    stay merged (negative control in tests), so equal=true per pair
-    pins the splitting operator itself."""
-    from ..corpus import merged_pair
-
-    return _pair_equality(spark, merged_pair, "w")
-
-
-QUERIES["x10_width_split_extract"] = x10_width_split_equivalence
-ORACLE["x10_width_split_extract"] = _PAIR_ORACLE
-
-
-def x11_grid_header_equivalence(spark, sf):
-    """Multi-row grid headers (docpact xlsx_extractor.py:377-430 DH2
-    merge-based estimation + 434-476 compound " / " stacking): a grid
-    doc whose header is a group merge + leaf row must extract to the
-    SAME span sequence as its flat twin carrying the pre-stacked
-    compound names. Oracle pins equal=true per pair."""
-    from ..corpus import grid_header_pair
-
-    return _pair_equality(spark, grid_header_pair, "g", corpus="grid")
-
-
-QUERIES["x11_grid_header_extract"] = x11_grid_header_equivalence
-ORACLE["x11_grid_header_extract"] = _PAIR_ORACLE
-
-
-def x12_stacked_header_equivalence(spark, sf):
-    """Stacked-header compound naming via bounds overlap (docpact
-    compress.py:2534-2552 preceding+in-run header stacking +
-    _build_stacked_headers 1549-1644): a doc whose header is a
-    group-label row over a leaf row — with one group label equidistant
-    between two column anchors so only its rendered extent decides the
-    column — must extract to the SAME span sequence as its flat twin
-    carrying the pre-stacked compound " / " names. Oracle pins
-    equal=true per pair."""
-    from ..corpus import stacked_pair
-
-    return _pair_equality(spark, stacked_pair, "s")
-
-
-QUERIES["x12_stacked_header_extract"] = x12_stacked_header_equivalence
-ORACLE["x12_stacked_header_extract"] = _PAIR_ORACLE
-
-
-def x13_flow_header_equivalence(spark, sf):
-    """DOCX-flow hierarchical headers with DH4 boundary-aware fill
-    (docpact docx_extractor.py:344-388 DH2 merge-based detection +
-    390-450 compound build): a flow doc whose merged index label would
-    bleed into the data columns under plain forward fill must extract
-    to the SAME span sequence as its flat twin carrying the
-    pre-stacked compound " / " names. Oracle pins equal=true per
-    pair."""
-    from ..corpus import flow_header_pair
-
-    return _pair_equality(spark, flow_header_pair, "f", corpus="flow")
-
-
-QUERIES["x13_flow_header_extract"] = x13_flow_header_equivalence
-ORACLE["x13_flow_header_extract"] = _PAIR_ORACLE
-
-
-def x14_reheader_equivalence(spark, sf):
-    """Re-header column remap (docpact interpret.py:1185-1240 Phase A):
-    a doc whose mid-run section re-header PERMUTES the global column
-    order must extract to the SAME span sequence as its flat twin
-    carrying every row in global order — the name-matched mapping
-    reorders the section's cells. Oracle pins equal=true per pair."""
-    from ..corpus import reheader_pair
-
-    return _pair_equality(spark, reheader_pair, "r")
-
-
-QUERIES["x14_reheader_extract"] = x14_reheader_equivalence
-ORACLE["x14_reheader_extract"] = _PAIR_ORACLE
-
-
-def x15_grid_format_equivalence(spark, sf):
-    """XH4 number-format hints (docpact xlsx_extractor.py:348-374): a
-    grid doc whose date column holds Excel serials under a date-type
-    format hint must extract to the SAME span sequence as its twin
-    carrying the ISO dates directly — and the currency/percentage
-    hints on its other columns must change nothing (display-only in
-    openpyxl, metadata-only in the reference). Oracle pins equal=true
-    per pair."""
-    from ..corpus import grid_format_pair
-
-    return _pair_equality(spark, grid_format_pair, "n", corpus="grid")
-
-
-QUERIES["x15_grid_format_extract"] = x15_grid_format_equivalence
-ORACLE["x15_grid_format_extract"] = _PAIR_ORACLE
-
-
-# ---------------------------------------------------------------- x09
-_N_STYLED = 30
-
-
-def x09_style_extract(spark, sf):
-    """Style/visual evidence channel (docpact compress.py:552-852 font
-    heuristics FH2/FH3 + compress.py:232-292 visual zebra VH3): style
-    flags ride the otherwise-unused media_ref of input text spans
-    ("st:b" bold, "st:i" italic, "st:#N" row fill) — the contract span
-    struct is unchanged, and output text spans still emit media_ref "".
-    Ruling lines ride kind='pdf_line' spans ("ln:h/v:<start>:<end>") —
-    the PDF drawings scan's span-model analogue (VH1 grid,
-    compress.py:123-165). Each styled archetype only extracts correctly
-    via the channel (bold multi-row word headers / zebra-striped
-    single-span lists / in-run italic captions / ruled grids over
-    single-span prose rows). The oracle embeds the GENERATOR's
-    ground-truth per-kind counts as constants — computed from how each
-    doc was built, independent of the kernels."""
-    from ..corpus import styled_doc
-    from ..extract.schema import INPUT_SCHEMA
-
-    rows = []
-    for i in range(_N_STYLED):
-        spans, _ = styled_doc(i)
-        rows.append(
-            {
-                "doc_id": f"styled-{i:06d}",
-                "spans": [
-                    {"kind": k, "text": t, "media_ref": m, "offset": o}
-                    for k, t, m, o in spans
-                ],
-            }
-        )
-    inp = spark.createDataFrame(rows, INPUT_SCHEMA)
-    out = extract(inp)
-    sel = ["doc_id"]
-    for kind in ("heading", "cell", "text", "media"):
-        sel.append(
-            F.expr(f"size(filter(spans, s -> s.kind = '{kind}'))").alias(
-                f"n_{kind}"
-            )
-        )
-    return out.select(*sel)
-
-
-def _x09_oracle() -> str:
-    from ..corpus import styled_doc
-
-    vals = []
-    for i in range(_N_STYLED):
-        _, tr = styled_doc(i)
-        vals.append(
-            f"('styled-{i:06d}', {tr['heading']}, {tr['cell']},"
-            f" {tr['text']}, {tr['media']})"
-        )
-    return (
-        "SELECT * FROM (VALUES "
-        + ", ".join(vals)
-        + ") AS t(doc_id, n_heading, n_cell, n_text, n_media)"
-    )
-
-
-QUERIES["x09_style_extract"] = x09_style_extract
-ORACLE["x09_style_extract"] = _x09_oracle()
-
-
-# ---------------------------------------------------------------- x06
-def x06_compression_ratio(spark, sf):
-    """Content-compression parity metric (the reference's ONLY published
-    performance numbers are char-compression ratios, COMPRESS.md:636-641
-    / README.md:22 "40-67% smaller"): per corpus, input span chars vs
-    extracted output chars and the reduction. Rows-only (kernel-derived),
-    deterministic."""
-    docs = t(spark, sf, "documents")
-    n = docs.count() // 2
-    inp = synthetic_corpus(spark, n, skew_docs=max(1, n // 500))
-    chars_in = inp.select(
-        "doc_id",
-        F.expr(
-            "aggregate(spans, 0L, (acc, s) -> acc + length(s.text))"
-        ).alias("chars_in"),
-    )
-    out = extract(inp)
-    chars_out = out.select(
-        "doc_id",
-        F.expr(
-            "aggregate(spans, 0L, (acc, s) -> acc + length(s.text))"
-        ).alias("chars_out"),
-    )
-    return (
-        chars_in.join(chars_out, "doc_id")
-        .select(F.split("doc_id", "-")[0].alias("corpus"), "chars_in", "chars_out")
-        .groupBy("corpus")
-        .agg(
-            F.sum("chars_in").alias("chars_in"),
-            F.sum("chars_out").alias("chars_out"),
-        )
-        .select(
-            "corpus",
-            "chars_in",
-            "chars_out",
-            F.round(
-                (1 - F.col("chars_out") / F.col("chars_in")) * 100, 2
-            ).alias("reduction_pct"),
-        )
-    )
-
-
-QUERIES["x06_compression_ratio"] = x06_compression_ratio
-
-
-# ---------------------------------------------------------------- x16
+# The shipping-report contract (port / vessel / tonnage / eta / cargo /
+# grade) that run_contract_pipeline maps the synthetic corpus onto.
 _X16_CONTRACT = {
     "schema": {
         "port": ["port"],
@@ -564,315 +96,3 @@ _X16_CONTRACT = {
         "port": {"not_null": True},
     },
 }
-
-
-def x16_corpus_spec(n_documents: int) -> tuple[str, int, int]:
-    """(staged path, n base docs, n skew docs) for the x16 corpus —
-    the ONE definition of its sizing, shared with bench.py so the
-    docs/sec denominator can't drift from what actually runs. The path
-    embeds the generator-source fingerprint: editing the corpus
-    generator invalidates the /tmp staging."""
-    from ..sources.synthetic import corpus_fingerprint
-
-    n = n_documents // 2
-    skew = max(1, n // 500)
-    path = f"/tmp/spark_graft_x16_corpus_{n}_{corpus_fingerprint()}"
-    return path, n, skew
-
-
-def x16_contract_e2e(spark, sf):
-    """End-to-end TYPED-contract pipeline over the full synthetic
-    corpus (the reference user's switch path, plans/contract_pipeline):
-    extract -> block grid -> deterministic dimension/measure mapping
-    (blank-header inference + re-classify on) -> contract-rule
-    validation, returning the wide mapped records. Benched as
-    contract_docs_per_sec in bench.py; rows-only (kernel-derived) —
-    the stage semantics are individually driver-green (x01/x02 suites,
-    u01/u02, v01)."""
-    import os
-
-    from ..plans.contract_pipeline import run_contract_pipeline
-    from ..sources.synthetic import write_corpus_table
-
-    # The north-rule input is a staged TABLE (Iceberg/parquet), not an
-    # in-flight generator: stage the deterministic seeded corpus once
-    # and read it back, so the pipeline (not Python corpus generation)
-    # is what executes — and the branch predicate rides the
-    # ingest-materialized n_spans column with row-group stats, exactly
-    # like the x01 flagship's documents scan.
-    path, n, skew = x16_corpus_spec(t(spark, sf, "documents").count())
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        write_corpus_table(spark, path, n, skew_docs=skew)
-    # spread(): the small bench corpus coalesces into ~2 scan bins
-    # (maxPartitionBytes), which would run the extraction kernels on 2
-    # of 32 cores; at production scale the scan has >= cores splits and
-    # spread() adds nothing (queries/base.py).
-    inp = spread(spark.read.parquet(path))
-    out = run_contract_pipeline(spark, _X16_CONTRACT, inp)
-    return out["mapped"]
-
-
-QUERIES["x16_contract_e2e"] = x16_contract_e2e
-
-
-# ---------------------------------------------------------------- x19
-# Caption pairing over the EXTRACTED interleaved stream — the graft
-# cell's loop closed: the north-rule extraction (x01) produces the
-# ordered (kind, text, media_ref, offset) span stream, and this
-# operator mines image-text pairs from it the way MMC4/OBELICS mine
-# from real interleaved documents: each media span takes the nearest
-# text span by stream position, preferring the PRECEDING one (captions
-# follow their figure's introduction), falling back to the following.
-# The oracle composes the flagship's layout-algebra oracle with the
-# identical window logic, so the pairs are value-hash-pinned against
-# constant truth end to end.
-_X19_ORACLE = f"""
-WITH es AS (
-{_X01_ORACLE}
-),
-ctx AS (
-  SELECT doc_id, kind, media_ref, "offset",
-         last_value(CASE WHEN kind = 'text' THEN text END IGNORE NULLS)
-           OVER (PARTITION BY doc_id ORDER BY "offset"
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           AS prev_text,
-         first_value(CASE WHEN kind = 'text' THEN text END IGNORE NULLS)
-           OVER (PARTITION BY doc_id ORDER BY "offset"
-                 ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)
-           AS next_text
-  FROM es
-)
-SELECT doc_id, media_ref, CAST("offset" AS INTEGER) AS "offset",
-       COALESCE(prev_text, next_text) AS caption,
-       CASE WHEN prev_text IS NOT NULL THEN 'prev' ELSE 'next' END
-         AS caption_src
-FROM ctx WHERE kind = 'media'
-"""
-
-
-def pair_media_spans(spans):
-    """Pair every media span of an ordered (doc_id, kind, text,
-    media_ref, offset) stream with its nearest text span — preceding
-    preferred, following fallback — returning
-    (doc_id, media_ref, offset, caption, caption_src)."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("doc_id").orderBy("offset")
-    txt = F.when(F.col("kind") == "text", F.col("text"))
-    ctx = spans.select(
-        "doc_id",
-        "kind",
-        "media_ref",
-        "offset",
-        F.last(txt, ignorenulls=True)
-        .over(w.rowsBetween(W.unboundedPreceding, -1))
-        .alias("prev_text"),
-        F.first(txt, ignorenulls=True)
-        .over(w.rowsBetween(1, W.unboundedFollowing))
-        .alias("next_text"),
-    )
-    return ctx.filter(F.col("kind") == "media").select(
-        "doc_id",
-        "media_ref",
-        F.col("offset").cast("int").alias("offset"),
-        F.coalesce("prev_text", "next_text").alias("caption"),
-        F.when(F.col("prev_text").isNotNull(), "prev")
-        .otherwise("next")
-        .alias("caption_src"),
-    )
-
-
-def x19_extracted_pairs(spark, sf):
-    """Image-text pairs mined from the EXTRACTED span stream: per
-    media span the nearest text span (preceding preferred, following
-    fallback) with its source tag.  On this corpus the prepended
-    title span means a preceding text span always exists, so the
-    registered rows are all caption_src='prev'; the 'next' fallback
-    branch is pinned by the unit test on a media-first stream.
-
-    Scale shape: one doc_id window over the extraction output — the
-    same exchange the ordered reassembly already paid, so at
-    production this pairing is a free rider on the extraction job's
-    final sort (sortWithinPartitions(doc_id, offset)); the window
-    carries two running text values, state O(1) per partition."""
-    return pair_media_spans(QUERIES["x01_extract_documents"](spark, sf))
-
-
-QUERIES["x19_extracted_pairs"] = x19_extracted_pairs
-ORACLE["x19_extracted_pairs"] = _X19_ORACLE
-
-
-# ---------------------------------------------------------------- x21
-# Incremental refresh + compaction under the DRIVER GATE (round-4
-# verdict ask #2): the pytest pin (incremental == full re-extraction,
-# tests/test_incremental.py) promoted to a DuckDB-twinned rows+hash
-# entry.  The corpus mutates deterministically by doc number —
-#   V1 = docs with n % 13 != 0               (n % 13 == 0: ADDED in V2)
-#   V2 = docs with n % 11 != 0               (n % 11 == 0: DELETED)
-#   docs with n % 7 == 0 in V2 get one appended 'revision note
-#   updated' span                            (CHANGED — and fp-visible)
-# — then the entry runs the REAL operational path: cold-start
-# extraction of V1 (seeds the content-hash manifest), incremental
-# refresh to V2 against it (extract/incremental.py: only
-# added/changed docs touch the kernels), small-file compaction of the
-# refreshed output (extract/compact.py, rename-swap), and emits the
-# POST-COMPACTION on-disk rows exploded to span grain with each doc's
-# CDC status (derived from the ACTUAL manifest diff, not arithmetic)
-# and the run's accounting counters as constant columns.  The DuckDB
-# twin computes full-extraction-of-V2 truth directly from the
-# documents parquet via the x01 layout algebra + the mutation rule —
-# so a hash match proves refresh + compaction together reproduce the
-# full re-extraction bit-for-bit, and that the router classified /
-# counted every doc correctly.  Appended span text is plain letters
-# ('revision note updated') so the x01 identity-transform argument
-# (extract_q.py:82) covers it unchanged.
-_X21_ORACLE = """
-WITH v2 AS (
-  SELECT doc_id AS n, text FROM documents WHERE doc_id % 11 <> 0
-),
-base AS (
-  SELECT 'mixed-' || CAST(n AS VARCHAR) AS doc_id, n,
-         string_split(text, ' ') AS ws
-  FROM v2
-),
-nn AS (
-  SELECT doc_id, n, ws,
-         CAST(ceil(len(ws) / 8.0) AS INT) AS n_chunks
-  FROM base
-),
-spans AS (
-  SELECT doc_id, n, n_chunks, 0 AS off, 'text' AS kind,
-         'title: doc ' || doc_id AS text, '' AS media_ref
-  FROM nn
-  UNION ALL
-  SELECT doc_id, n, n_chunks, g.i + 1 AS off,
-         CASE WHEN g.i % 4 = 3 THEN 'media' ELSE 'text' END AS kind,
-         CASE WHEN g.i % 4 = 3 THEN ''
-              ELSE array_to_string(ws[g.i * 8 + 1 : g.i * 8 + 8], ' ')
-         END AS text,
-         CASE WHEN g.i % 4 = 3 THEN 'img://' || doc_id || '/' || g.i
-              ELSE ''
-         END AS media_ref
-  FROM nn, LATERAL unnest(generate_series(0, n_chunks - 1)) AS g(i)
-  UNION ALL
-  SELECT doc_id, n, n_chunks, n_chunks + 1 AS off, 'text',
-         'revision note updated', ''
-  FROM nn WHERE n % 7 = 0
-),
-acct AS (
-  SELECT
-    CAST(sum(CASE WHEN n % 13 <> 0 AND n % 7 <> 0
-             THEN 1 ELSE 0 END) AS BIGINT) AS n_carried,
-    CAST(sum(CASE WHEN n % 13 = 0 OR n % 7 = 0
-             THEN 1 ELSE 0 END) AS BIGINT) AS n_reextracted
-  FROM v2
-),
-del AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_deleted FROM documents
-  WHERE doc_id % 13 <> 0 AND doc_id % 11 = 0
-)
-SELECT s.doc_id,
-       CASE WHEN s.n % 13 = 0 THEN 'added'
-            WHEN s.n % 7 = 0 THEN 'changed'
-            ELSE 'carried' END AS status,
-       s.n_chunks + 1
-         + (CASE WHEN s.n % 7 = 0 THEN 1 ELSE 0 END) AS spans_in,
-       s.n_chunks + 1
-         + (CASE WHEN s.n % 7 = 0 THEN 1 ELSE 0 END) AS spans_out,
-       0 AS dropped,
-       s.kind, s.text, s.media_ref, s.off AS offset,
-       acct.n_carried, acct.n_reextracted, del.n_deleted
-FROM spans s, acct, del
-"""
-
-
-def x21_incremental_refresh(spark, sf):
-    """Incremental re-extraction + compaction, driver-gated: run the
-    cold-start V1 extraction, the content-hash incremental refresh to
-    the mutated V2 corpus, and small-file compaction of the refreshed
-    output, then emit the post-compaction rows at span grain with the
-    manifest-diff CDC status and the run's accounting counters.  The
-    oracle recomputes full-extraction-of-V2 truth directly, so the
-    hash match IS the incremental==full guarantee under the external
-    gate (module comment above for the mutation rule).
-
-    Scale shape: everything here is the operational layer's own
-    documented shape — fingerprint scan + manifest equi-join diff
-    (cost ∝ corpus, thin columns), kernels touch |changed| docs only,
-    compaction one hash-routed repartition per bucket — plus one
-    doc_id equi-join to attach status at the end."""
-    import shutil
-    import tempfile
-
-    from ..extract.checkpoint import read_output
-    from ..extract.compact import compact_output
-    from ..extract.incremental import input_fingerprint, run_incremental
-
-    inp = _doc_spans_from_documents(spark, sf)
-    num = F.expr("CAST(substring(doc_id, 7) AS BIGINT)")
-    v1 = inp.filter(num % 13 != 0)
-    mut = F.expr(
-        "concat(spans, array(named_struct("
-        "'kind', 'text', 'text', 'revision note updated',"
-        " 'media_ref', '', 'offset', size(spans))))"
-    )
-    v2 = inp.filter(num % 11 != 0).withColumn(
-        "spans", F.when(num % 7 == 0, mut).otherwise(F.col("spans"))
-    )
-    root = tempfile.mkdtemp(prefix="spark_graft_x21_")
-    d1, d2 = f"{root}/v1", f"{root}/v2"
-    run_incremental(spark, v1, d1, n_buckets=8)
-    m2 = run_incremental(spark, v2, d2, prev_dir=d1, n_buckets=8)
-    compact_output(spark, d2, files_per_bucket=1)
-    man1 = spark.read.parquet(f"{d1}/_manifest").select(
-        F.col("doc_id").alias("p_id"), F.col("fp").alias("p_fp")
-    )
-    status = (
-        input_fingerprint(v2)
-        .join(man1, F.col("doc_id") == F.col("p_id"), "left")
-        .select(
-            "doc_id",
-            F.when(F.col("p_fp").isNull(), "added")
-            .when(F.col("fp") != F.col("p_fp"), "changed")
-            .otherwise("carried")
-            .alias("status"),
-        )
-    )
-    out = read_output(spark, d2)
-    res = (
-        out.join(status, "doc_id")
-        .select(
-            "doc_id",
-            "status",
-            F.col("metrics.spans_in").alias("spans_in"),
-            F.col("metrics.spans_out").alias("spans_out"),
-            F.col("metrics.dropped").alias("dropped"),
-            F.explode("spans").alias("span"),
-        )
-        .select(
-            "doc_id",
-            "status",
-            "spans_in",
-            "spans_out",
-            "dropped",
-            F.col("span.kind").alias("kind"),
-            F.col("span.text").alias("text"),
-            F.col("span.media_ref").alias("media_ref"),
-            F.col("span.offset").alias("offset"),
-            F.lit(m2["n_carried"]).cast("long").alias("n_carried"),
-            F.lit(m2["n_reextracted"]).cast("long").alias(
-                "n_reextracted"
-            ),
-            F.lit(m2["n_deleted"]).cast("long").alias("n_deleted"),
-        )
-        # materialize before dropping the scratch trees: the caller
-        # consumes the result lazily, and repeated bench/correctness
-        # invocations must not accumulate temp output snapshots
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return res
-
-
-QUERIES["x21_incremental_refresh"] = x21_incremental_refresh
-ORACLE["x21_incremental_refresh"] = _X21_ORACLE

@@ -2788,8 +2788,7 @@ def t29(spark, sf):
     distinct word-3-gram shingles, how many are corpus-unique
     (document frequency 1), the exact ppm novelty ratio, and a
     boilerplate verdict below {thr}% novelty.  Grain = documents with
-    at least one shingle (>= 3 tokens); the suite fold coalesces
-    shingle-less docs to trivially-novel.
+    at least one shingle (>= 3 tokens).
 
     Scale shape (100 TB): the exploded distinct (doc_id, shingle)
     relation is persisted and feeds both branches (d02/d04's pattern —

@@ -271,74 +271,6 @@ def q18(spark, sf):
     )
 
 
-# ---------------------------------------------------------------- q37
-@q(
-    "q37_event_time_windows",
-    oracle="""
-SELECT time_bucket(INTERVAL '10 minutes', ts) AS window_start,
-       event_type AS key,
-       count(*) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-FROM events
-GROUP BY 1, 2
-""",
-)
-def q37(spark, sf):
-    """Event-time tumbling windows — the BATCH twin of the streaming
-    windowed aggregation (streaming/windows.py applies the identical
-    expression with a watermark; SURVEY.md §2.10).  Decimal-exact sums
-    keep the result partition-invariant."""
-    from ..streaming.windows import windowed_counts
-
-    ev = t(spark, sf, "events")
-    win = windowed_counts(
-        ev, window="10 minutes", key_col="event_type", streaming=False
-    )
-    sums = (
-        ev.groupBy(
-            F.window("ts", "10 minutes").alias("w"),
-            F.col("event_type").alias("key"),
-        )
-        .agg(F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "key", "sum_value")
-    )
-    return win.drop("window_end").join(sums, ["window_start", "key"])
-
-
-# ---------------------------------------------------------------- q40
-@q(
-    "q40_sliding_windows",
-    oracle="""
-WITH s AS (
-  SELECT time_bucket(INTERVAL '5 minutes', ts)
-           - (k.k * INTERVAL '5 minutes') AS window_start,
-         event_type AS key
-  FROM events, (VALUES (0), (1)) k(k)
-)
-SELECT window_start, key, count(*) AS n_events
-FROM s GROUP BY 1, 2
-""",
-)
-def q40(spark, sf):
-    """Sliding event-time windows (width 10 min, slide 5 min) — the batch
-    twin of the streaming sliding aggregation, sharing
-    streaming/windows.py:windowed_counts verbatim (each event lands in
-    width/slide = 2 windows; the oracle enumerates the same two
-    slide-grid starts per event). One shuffle on (window, key) with
-    map-side partials — the sliding fan-out happens in the projection,
-    not as a join."""
-    from ..streaming.windows import windowed_counts
-
-    ev = t(spark, sf, "events")
-    return windowed_counts(
-        ev,
-        window="10 minutes",
-        slide="5 minutes",
-        key_col="event_type",
-        streaming=False,
-    ).drop("window_end")
-
-
 # ---------------------------------------------------------------- q41
 @q(
     "q41_asof_join",
@@ -855,40 +787,6 @@ def q45(spark, sf):
                 "retention_ppm"
             ),
         )
-    )
-
-
-# ---------------------------------------------------------------- q47
-@q(
-    "q47_click_attribution",
-    oracle="""
-SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
-       c.ts AS click_ts, p.ts AS purchase_ts,
-       epoch_us(p.ts) - epoch_us(c.ts) AS lag_us
-FROM events c JOIN events p
-  ON p.user_id = c.user_id
- AND c.event_type = 'click' AND p.event_type = 'purchase'
- AND p.ts >= c.ts AND p.ts < c.ts + INTERVAL 30 MINUTE
-""",
-)
-def q47(spark, sf):
-    """Click -> purchase attribution (every purchase matched to every
-    same-user click in the preceding 30 minutes) — the BATCH TWIN of
-    the watermarked stream-stream interval join, sharing
-    streaming/attribution.py:attribute_purchases verbatim (the
-    Structured Streaming guarantee under test: the streamed inner join
-    emits exactly the batch result once watermarks pass).
-
-    Batch plan: one user_id sort-merge join with the time-range
-    residual inline — per-user match fan-out is bounded by horizon x
-    event rate, the same bound that sizes the streaming join state.
-    DuckDB verifies with its own inequality-join planner."""
-    from ..streaming.attribution import attribute_purchases
-
-    ev = t(spark, sf, "events")
-    return attribute_purchases(
-        ev.filter(F.col("event_type") == "click"),
-        ev.filter(F.col("event_type") == "purchase"),
     )
 
 

@@ -12,6 +12,23 @@ import os
 
 from pyspark.sql import SparkSession
 
+MAX_DRIVER_MEM_GB = 24
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap sized to the host: min(24g, half of MemTotal), whole
+    gigabytes, at least 1g. A host without ``meminfo`` gets 24g."""
+    try:
+        with open(meminfo) as f:
+            kb = next(
+                int(line.split()[1])
+                for line in f
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration):
+        return f"{MAX_DRIVER_MEM_GB}g"
+    return f"{max(1, min(MAX_DRIVER_MEM_GB, kb // 2 // 1024**2))}g"
+
 
 def get_spark(
     app: str = "spark-docextract",
@@ -32,7 +49,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", "false")
     )

@@ -37,16 +37,13 @@ def synthetic_corpus(
     skew_docs: int = 0,
     seed: int = DEFAULT_SEED,
     partitions: int | None = None,
-    id_offset: int = 0,
 ) -> DataFrame:
     """(doc_id, spans) DataFrame: round-robin pdfish/html/mixed/grid/
     boxes/flow docs plus ``skew_docs`` mega documents (FIXTURES.md scale
-    tiers).  ``id_offset``
-    shifts the doc-id range so successive drops don't collide (streaming
-    ingestion tests)."""
+    tiers)."""
     n_corp = len(_CORPORA)
     base = (
-        spark.range(id_offset, id_offset + n_docs)
+        spark.range(n_docs)
         .withColumn(
             "doc_id",
             F.concat(

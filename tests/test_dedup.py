@@ -1,119 +1,8 @@
-"""Streaming dedup-at-ingest: every clause of the module's semantics
-contract, against a real checkpointed multi-batch run — in-horizon
-suppression (in-batch and cross-batch), state eviction past the horizon
-(the duplicate re-emits), and the late-data drop of a never-seen row."""
+"""Batch dedup queries over the sf testdata documents: d13's incremental
+LSH verdicts against d02's verified pairs, d14's banded-recall audit and
+d15's 1-bit minhash estimator, each against a pure-Python replication."""
 
 from __future__ import annotations
-
-import datetime as dt
-import shutil
-
-import pytest
-from pyspark.sql import types as T
-
-from pdf_ocr_spark.streaming.dedup import content_key, stream_dedup
-
-SCHEMA = T.StructType(
-    [
-        T.StructField("ts", T.TimestampType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), False),
-    ]
-)
-
-
-def _t(h, m):
-    return dt.datetime(2026, 1, 1, h, m)
-
-
-@pytest.fixture()
-def dirs(tmp_path):
-    d = {k: str(tmp_path / k) for k in ("in", "out", "ckpt")}
-    yield d
-    for p in d.values():
-        shutil.rmtree(p, ignore_errors=True)
-
-
-def _write(spark, path, rows):
-    # one file per batch so each _run sees exactly one new micro-batch;
-    # assertions below still treat the within-batch survivor as arbitrary
-    # (contract clause #2 — single-file order is not a Spark guarantee)
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(path)
-
-
-def _run(spark, dirs):
-    q = stream_dedup(
-        spark, dirs["in"], dirs["out"], dirs["ckpt"], SCHEMA,
-        watermark="30 minutes",
-    )
-    assert q.awaitTermination(300), "streaming run did not finish"
-
-
-def test_stream_dedup_contract(spark, dirs):
-    # batch 1: two distinct texts + an in-batch duplicate (whitespace
-    # variant — the normalization must fold it onto the same key)
-    _write(
-        spark,
-        dirs["in"],
-        [
-            (_t(9, 0), 1, "alpha beta gamma"),
-            (_t(9, 1), 2, "Alpha  beta   GAMMA"),  # dup of doc 1, in-batch
-            (_t(9, 2), 3, "wholly different text"),
-        ],
-    )
-    _run(spark, dirs)
-    # batch 2 (same query lineage via checkpoint): a cross-batch dup
-    # inside the horizon + a new doc far ahead that advances the
-    # watermark to 11:30
-    _write(
-        spark,
-        dirs["in"],
-        [
-            (_t(9, 5), 4, "wholly different text"),  # in-horizon dup
-            (_t(12, 0), 5, "a third unique doc"),    # advances watermark
-        ],
-    )
-    _run(spark, dirs)
-    # batch 3: a duplicate PAST the horizon (state evicted -> re-emit)
-    # and a never-seen row already older than the watermark (dropped)
-    _write(
-        spark,
-        dirs["in"],
-        [
-            (_t(12, 5), 6, "alpha beta gamma"),       # re-emits (#3)
-            (_t(9, 10), 7, "late unique never seen"),  # late-drop (#4)
-        ],
-    )
-    _run(spark, dirs)
-
-    out = spark.read.parquet(dirs["out"])
-    got = {r["doc_id"]: r["norm_hash"] for r in out.collect()}
-    # contract clause 2: WHICH of an in-batch duplicate pair (docs 1/2)
-    # survives is arbitrary — assert exactly one did, not a specific one
-    alpha_survivor = set(got) & {1, 2}
-    assert len(alpha_survivor) == 1
-    # doc 4 suppressed cross-batch in-horizon; 6 re-emitted; 7 late-drop
-    assert set(got) == alpha_survivor | {3, 5, 6}
-    # the streaming key equals the batch d01 key, row for row (docs 1 and
-    # 2 normalize to the same key, so the alpha survivor's hash is fixed)
-    batch = {
-        r["doc_id"]: r["norm_hash"]
-        for r in content_key(
-            spark.createDataFrame(
-                [(_t(9, 0), 1, "alpha beta gamma"),
-                 (_t(9, 2), 3, "wholly different text"),
-                 (_t(12, 0), 5, "a third unique doc"),
-                 (_t(12, 5), 6, "alpha beta gamma")],
-                SCHEMA,
-            )
-        ).collect()
-    }
-    assert {got[d] for d in alpha_survivor} == {batch[1]}
-    assert all(got[d] == batch[d] for d in (3, 5, 6))
-    # the re-emitted duplicate carries the same key as its first copy
-    assert got[6] == batch[1]
 
 
 def test_d13_incremental_lsh_agrees_with_d02_pairs(spark):

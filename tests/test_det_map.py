@@ -118,9 +118,8 @@ def test_records(spark, fixture):
 # ---------------------------------------------------------------------
 # Independent sequential oracle: a pure-Python implementation written
 # from the REFERENCE's loop structure (interpret.py:1335-1618), compared
-# against the Spark operator over seeded randomized layouts. The DuckDB
-# twin replicates the relational algorithm; this one replicates the
-# reference's sequential one — divergence in either direction fails.
+# against the Spark operator over seeded randomized layouts, so the
+# relational algorithm cannot drift from the reference's sequential one.
 # Deliberate shared deviation (documented in operators/det_map.py): the
 # shared-column pick uses min(canonical) where the reference takes
 # alias-dict insertion order.

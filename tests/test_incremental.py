@@ -201,3 +201,26 @@ def test_refresh_write_is_hash_distributed(spark, tmp_path):
             if f.endswith(".parquet")
         ]
         assert len(files) == 1, (name, files)
+
+
+def test_corrupt_manifest_raises_and_releases_the_cache(spark, tmp_path):
+    """A missing manifest is a cold start; an unreadable one fails the
+    refresh loudly, and the failed refresh leaves nothing cached."""
+    from pdf_ocr_spark.extract.incremental import read_manifest, run_incremental
+    from pdf_ocr_spark.sources.synthetic import synthetic_corpus
+
+    assert read_manifest(spark, str(tmp_path / "none")) is None
+
+    prev = tmp_path / "prev"
+    (prev / "_manifest").mkdir(parents=True)
+    (prev / "_manifest" / "part-0.parquet").write_bytes(b"junk")
+    spark.catalog.clearCache()
+    with pytest.raises(Exception, match="part-0.parquet"):
+        run_incremental(
+            spark,
+            synthetic_corpus(spark, 6),
+            str(tmp_path / "out"),
+            prev_dir=str(prev),
+            n_buckets=4,
+        )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -604,7 +604,7 @@ def test_pdfish_italic_caption_demoted():
 
 def test_styled_corpus_matches_generator_truth():
     """Every styled corpus doc extracts to exactly the generator's
-    ground-truth per-kind counts (the x09 oracle, kernel-independent)."""
+    ground-truth per-kind counts (kernel-independent)."""
     from collections import Counter
 
     from pdf_ocr_spark.corpus import styled_doc
@@ -620,9 +620,9 @@ def test_styled_corpus_matches_generator_truth():
 
 def test_twin_pairs_extract_equal():
     """Every twin-pair family extracts both sides to the SAME span
-    sequence (the x07_twin_extract_suite invariant, kernel level):
-    transposed vs flat, multi-row vs pre-merged, width-merged vs
-    unmerged."""
+    sequence at kernel level: transposed vs flat, multi-row vs
+    pre-merged, width-merged vs unmerged (test_extract_truth runs all
+    eight twin families through Spark)."""
     from pdf_ocr_spark.corpus import merged_pair, multirow_pair, transposed_pair
 
     for fam, pair_fn in (
@@ -780,7 +780,7 @@ def test_reheader_column_remap():
 
 
 def test_stacked_pair_bounds_overlap():
-    """x12 twin family: the stacked doc equals its flat compound-name
+    """Stacked twin family: the stacked doc equals its flat compound-name
     twin, and ONLY via the bounds-overlap channel — stripping the width
     tokens drops g2 to the nearest-anchor tie-break (wrong column) and
     breaks the equality (negative control)."""

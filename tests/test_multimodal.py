@@ -57,12 +57,12 @@ def test_feature_mean_byte_matches_manual_sum():
 
 
 def test_registry_is_consistent():
-    from pdf_ocr_spark.queries import ALL_ORACLES, ALL_QUERIES
+    from pdf_ocr_spark.queries import FULL_ORACLES, FULL_QUERIES
 
-    assert set(ALL_ORACLES) <= set(ALL_QUERIES)
+    assert set(FULL_ORACLES) <= set(FULL_QUERIES)
     # every new training-data operator family is registered
     for prefix in ("d0", "s0", "t0", "m0"):
-        assert any(k.startswith(prefix) for k in ALL_QUERIES), prefix
+        assert any(k.startswith(prefix) for k in FULL_QUERIES), prefix
 
 
 def test_resize_plan_integer_math_and_noop():

@@ -57,3 +57,19 @@ def test_rerun_after_completion_is_noop(spark, tmp_path):
     stats = run_resumable(spark, inp, out_dir, n_buckets=4, chunk_buckets=4)
     assert stats["chunks_processed"] == 0
     assert stats["buckets_skipped"] == 4
+
+
+@pytest.mark.spark
+def test_ledger_probe_missing_partial_and_corrupt(spark, tmp_path):
+    """No ledger is a fresh run, a killed first append (``_temporary``
+    only) holds no buckets, and an unreadable ledger raises instead of
+    passing for "nothing done yet"."""
+    out_dir = str(tmp_path / "out")
+    assert completed_buckets(spark, out_dir) == set()
+
+    (tmp_path / "out" / "_progress" / "_temporary" / "0").mkdir(parents=True)
+    assert completed_buckets(spark, out_dir) == set()
+
+    (tmp_path / "out" / "_progress" / "part-0.parquet").write_bytes(b"junk")
+    with pytest.raises(Exception, match="part-0.parquet"):
+        completed_buckets(spark, out_dir)

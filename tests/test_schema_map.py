@@ -108,53 +108,3 @@ def test_norm_three_spellings_agree(spark):
     ]
     py_out = [norm_header_py(s) for s in samples]
     assert spark_out == py_out == duck_out
-
-
-def test_h04_trigram_fuzzy_matches_python_reference(spark):
-    """h04: the trigram Jaccard, argmax alias, and accept verdicts
-    match a pure-Python set reference; the typo headers accept onto
-    the right canonicals and the unrelated header is rejected."""
-    from pdf_ocr_spark.queries.schema_map_q import (
-        _H04_ACCEPT_MILLI,
-        _alias_rows,
-        QUERIES,
-    )
-    from pdf_ocr_spark.operators.schema_map import norm_header_py
-
-    rows = {
-        r["header"]: r
-        for r in QUERIES["h04_fuzzy_schema_match"](
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-
-    def tri(s):
-        s = norm_header_py(s)
-        n = max(len(s) - 2, 1)
-        return {s[i : i + 3] for i in range(n)}
-
-    expected_unmatched = {"Completely Unknown", "Tonage (MT)", "Port Nmae"}
-    assert set(rows) == expected_unmatched
-    for header, r in rows.items():
-        best = min(
-            (
-                (
-                    -(1000 * len(tri(header) & tri(a)) // len(tri(header) | tri(a))),
-                    c,
-                    a,
-                )
-                for c, a in _alias_rows()
-            ),
-        )
-        score, canonical, alias = -best[0], best[1], best[2]
-        assert (r["canonical"], r["alias"], r["jac_milli"]) == (
-            canonical,
-            alias,
-            score,
-        ), header
-        assert r["accepted"] == (score >= _H04_ACCEPT_MILLI)
-    assert rows["Tonage (MT)"]["canonical"] == "tonnage"
-    assert rows["Tonage (MT)"]["accepted"]
-    assert rows["Port Nmae"]["canonical"] == "port"
-    assert rows["Port Nmae"]["accepted"]
-    assert not rows["Completely Unknown"]["accepted"]

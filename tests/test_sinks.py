@@ -1,8 +1,12 @@
 """CSV/TSV/Parquet sink round-trips (sources/sinks.py —
-docpact serialize.py:604-750 semantics)."""
+docpact serialize.py:604-750 semantics) and the table-format layer
+(sources/catalog.py)."""
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
+from pdf_ocr_spark.sources.catalog import TableIO, iceberg_available
 from pdf_ocr_spark.sources.sinks import write_csv, write_parquet, write_tsv
 
 
@@ -67,3 +71,33 @@ def test_pandas_polars_sinks(spark):
     except ImportError:
         with pytest.raises(NotImplementedError):
             to_polars(df)
+
+
+def test_tableio_parquet_fallback_verbs(spark, tmp_path):
+    """Without Iceberg jars TableIO must auto-fall-back and the
+    three storage verbs must behave identically to the Iceberg semantics."""
+    assert iceberg_available(spark) is False
+    io = TableIO(spark)
+    assert io.iceberg is False
+
+    tgt = str(tmp_path / "tbl")
+    df = spark.createDataFrame(
+        [(i, i % 3) for i in range(30)], "id long, bucket int"
+    )
+    io.create_or_replace(df, tgt, partition_col="bucket")
+    assert io.read(tgt).count() == 30
+
+    io.append(
+        df.filter("bucket = 0").withColumn("id", F.col("id") + 100),
+        tgt,
+        partition_col="bucket",
+    )
+    assert io.read(tgt).count() == 40
+
+    # overwrite only bucket 1's partition; others untouched
+    repl = spark.createDataFrame([(999, 1)], "id long, bucket int")
+    io.overwrite_partitions(repl, tgt, "bucket")
+    out = io.read(tgt)
+    assert out.filter("bucket = 1").count() == 1
+    assert out.filter("bucket = 0").count() == 20
+    assert out.filter("bucket = 2").count() == 10

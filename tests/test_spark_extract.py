@@ -107,35 +107,6 @@ def test_output_schema_stable(spark):
     ]
 
 
-def test_x01_oracle_precondition_holds_on_testdata():
-    """The x01 value-hash oracle (queries/extract_q.py) relies on the
-    mixed kernel being the identity on documents.text: plain single-
-    spaced words — no digits, colons, commas, parens, %, $ or doubled
-    spaces (no coercion, no field lines beyond the title, no empty
-    drops). Pin that precondition on every available SF tier so a
-    testdata change fails HERE, not as an opaque hash mismatch."""
-    import os
-    import re
-
-    import duckdb
-
-    con = duckdb.connect()
-    checked = 0
-    for sf in ("0.001", "0.01", "0.1"):
-        p = f"/root/testdata/sf{sf}/documents.parquet"
-        if not os.path.exists(p):
-            continue
-        rows = con.sql(
-            f"SELECT text FROM read_parquet('{p}')"
-        ).fetchall()
-        assert rows, p
-        for (text,) in rows:
-            assert text and " " in text, p
-            assert not re.search(r"[0-9:,.()%$]|  ", text), p
-        checked += 1
-    assert checked >= 2
-
-
 @pytest.mark.spark
 def test_dirty_nullable_table_tolerance(spark, tmp_path):
     """Production tables are nullable (parquet/Iceberg scans don't
@@ -183,34 +154,3 @@ def test_dirty_nullable_table_tolerance(spark, tmp_path):
     _assert_golden(
         [r for r in out.values() if r["doc_id"] in clean_ids], clean_ids
     )
-
-
-def test_x19_pairing_prefers_prev_and_falls_back_to_next(spark):
-    """pair_media_spans: preceding text wins; a media-first stream
-    exercises the following-text fallback; media with no text at all
-    yields a NULL caption."""
-    from pdf_ocr_spark.queries.extract_q import pair_media_spans
-
-    rows = [
-        # doc a: text before and after -> prev wins
-        ("a", "text", "intro", "", 0),
-        ("a", "media", "", "img://a/0", 1),
-        ("a", "text", "after", "", 2),
-        # doc b: media first -> next fallback
-        ("b", "media", "", "img://b/0", 0),
-        ("b", "text", "caption below", "", 1),
-        # doc c: only media -> no caption
-        ("c", "media", "", "img://c/0", 0),
-    ]
-    spans = spark.createDataFrame(
-        rows, "doc_id string, kind string, text string,"
-        " media_ref string, offset int"
-    )
-    got = {
-        r["media_ref"]: r for r in pair_media_spans(spans).collect()
-    }
-    assert got["img://a/0"]["caption"] == "intro"
-    assert got["img://a/0"]["caption_src"] == "prev"
-    assert got["img://b/0"]["caption"] == "caption below"
-    assert got["img://b/0"]["caption_src"] == "next"
-    assert got["img://c/0"]["caption"] is None

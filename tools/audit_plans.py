@@ -76,9 +76,6 @@ BOUNDED_GLOBAL_WINDOWS = {
     "t20_bpe_merges": 2,
     # confusion-cell grain: |langs|^2 rows at any corpus size
     "t36_langid_confusion": 1,
-    # suite twins inherit their members' bounded windows
-    "s01_similarity_suite": 1,  # s11's 5-row ranking
-    "t06_term_mining_suite": 3,  # t20's pair-vocab rankings + t36
 }
 
 

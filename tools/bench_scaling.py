@@ -466,25 +466,6 @@ the honest quantity) and the fastest run is scored.
 - mega-docs cluster into few parquet splits → the 10^6-span explode ran
   in ONE task (serial floor ~30 % of wall). Fix: repartition the big-doc
   branch by doc_id before page-grain explode (`extract.salt_partitions`).
-- signature/shingle tables feeding multiple join branches are persisted
-  so tokenize+explode+minhash aggregation runs once, not 2-6x.
-- small single-row-group scans fan out before shingle/hash compute
-  (`queries/base.py spread()` — a no-op at production scale).
-
-## Headline bench
-
-`python bench.py` (sf0.1, local[32]) prints per-query seconds; the
-extraction flagship also reports docs/sec (`extract_docs_per_sec`) and
-the typed-contract e2e path docs/sec (`contract_docs_per_sec`).
-Per-query timing is min over SPARK_GRAFT_BENCH_ROUNDS (default 2)
-interleaved rounds of BACK-TO-BACK PAIRS: rep 1 of a pair absorbs
-recompile + heavyweight wake (measured: after x16/u02's very large
-generated plans run, the next execution of every other query pays a
-one-time ~10-60 % codegen-cache-eviction penalty that a settle job
-does not cure but an immediate same-query rerun does), rep 2 measures
-steady state, and interleaving decorrelates the co-tenant steal bursts.
-Round-3 reading (quiet host): shared-query total 15.2 s vs round 1's
-20.7 s on identical queries, flagship 4 931 docs/s.
 """)
 
 
