@@ -1,4 +1,4 @@
-"""Resumable extraction runner: per-partition progress ledger + lineage.
+"""Resumable extraction runner: bucketed chunks + a per-chunk ledger.
 
 north_rule: "checkpoints per-partition progress with lineage + extraction
 metrics (spans/doc, drop reasons) so a killed run resumes without
@@ -10,11 +10,16 @@ Mechanism:
   - buckets are processed in chunks; each chunk's output is written to
     ``<out>/data/`` partitioned by ``bucket`` with DYNAMIC partition
     overwrite (idempotent — a replayed bucket replaces, never duplicates);
-  - after a chunk commits, one ledger row per bucket is appended to
-    ``<out>/_progress/`` carrying lineage (run_id, input fingerprint) and
-    extraction metrics (docs, spans in/out, dropped, top drop reasons);
+  - a chunk runs in as many tasks as its share of the input would get in
+    one unchunked pass (``chunk_partitions``), so chunking adds no Python
+    tasks, each of which has a fixed start-up cost;
+  - the write observes its own rows (``DataFrame.observe``: docs and the
+    sums of spans in/out and dropped), and after the data commit one
+    ledger row per chunk is appended to ``<out>/_progress/``: the chunk's
+    buckets, run_id, commit time and those observed totals. Nothing
+    re-reads the output;
   - resume = read ledger → anti-set of completed buckets → process only
-    the remainder. A bucket is completed iff its ledger row exists, and
+    the remainder. A bucket is completed iff a ledger row lists it, and
     ledger rows are written only after the data commit, so a kill between
     data-write and ledger-append merely re-extracts one chunk
     idempotently.
@@ -22,12 +27,19 @@ Mechanism:
 
 from __future__ import annotations
 
+import math
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .pipeline import BIG_DOC_THRESHOLD, extract
+
+LEDGER_SCHEMA = (
+    "chunk int, buckets array<int>, run_id string, committed_at double, "
+    "docs long, spans_in long, spans_out long, dropped long"
+)
+TOTALS = ("docs", "spans_in", "spans_out", "dropped")
 
 
 def _bucketed(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -44,15 +56,38 @@ def path_exists(spark: SparkSession, path: str) -> bool:
 
 
 def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
-    """Buckets with a ledger row. No ledger means a fresh run; a ledger
-    that exists but cannot be read raises. The schema is given, so a
-    ledger holding only a killed first append's ``_temporary`` reads as
+    """Buckets listed by a ledger row. No ledger means a fresh run; a
+    ledger that exists but cannot be read raises. The schema is given, so
+    a ledger holding only a killed first append's ``_temporary`` reads as
     empty instead of failing schema inference."""
     path = f"{out_dir}/_progress"
     if not path_exists(spark, path):
         return set()
-    ledger = spark.read.schema("bucket int").parquet(path)
-    return {r.bucket for r in ledger.distinct().collect()}
+    ledger = spark.read.schema(LEDGER_SCHEMA).parquet(path)
+    return {b for r in ledger.select("buckets").collect() for b in r.buckets}
+
+
+def chunk_partitions(
+    n_in: int, chunk_size: int, n_buckets: int, parallelism: int
+) -> int:
+    """Tasks for one chunk: its share of the input's ``n_in`` partitions,
+    so a chunk's task carries as many docs as an unchunked task; never
+    fewer than ``parallelism`` (every core stays busy) and never more
+    than ``n_in``."""
+    share = math.ceil(n_in * chunk_size / n_buckets)
+    return min(n_in, max(share, parallelism))
+
+
+def chunk_input(
+    work: DataFrame, chunk: list[int], n_buckets: int, n_in: int
+) -> DataFrame:
+    """The bucketed input's rows in ``chunk``, coalesced to
+    ``chunk_partitions`` tasks. The scan stays as it is: no cache and no
+    shuffle, and the mega branch's size predicate still reaches it."""
+    n = chunk_partitions(
+        n_in, len(chunk), n_buckets, work.sparkSession.sparkContext.defaultParallelism
+    )
+    return work.filter(F.col("bucket").isin(chunk)).coalesce(n)
 
 
 def run_resumable(
@@ -66,7 +101,9 @@ def run_resumable(
     fail_after_chunks: int | None = None,
     run_id: str | None = None,
 ) -> dict:
-    """Run (or resume) the extraction job. Returns summary stats.
+    """Run (or resume) the extraction job. Returns summary stats,
+    including the observed ``docs``, ``spans_in``, ``spans_out`` and
+    ``dropped`` totals of the chunks this call processed.
 
     ``fail_after_chunks`` is a test hook simulating a killed run."""
     run_id = run_id or uuid.uuid4().hex[:12]
@@ -76,13 +113,23 @@ def run_resumable(
     chunks = [
         pending[i : i + chunk_buckets] for i in range(0, len(pending), chunk_buckets)
     ]
+    # planning only for a file scan; an input with a shuffle runs it here
+    n_in = work.rdd.getNumPartitions() if chunks else 0
+    totals = dict.fromkeys(TOTALS, 0)
     processed = 0
     for ci, chunk in enumerate(chunks):
-        chunk_df = work.filter(F.col("bucket").isin(chunk))
-        out = extract(
-            chunk_df.select("doc_id", "spans"), big_doc_threshold, salt_partitions
+        chunk_df = chunk_input(work, chunk, n_buckets, n_in)
+        out = _bucketed(
+            extract(chunk_df, big_doc_threshold, salt_partitions), n_buckets
         )
-        out = _bucketed(out, n_buckets)
+        obs = Observation()
+        out = out.observe(
+            obs,
+            F.count(F.lit(1)).alias("docs"),
+            F.sum("metrics.spans_in").alias("spans_in"),
+            F.sum("metrics.spans_out").alias("spans_out"),
+            F.sum("metrics.dropped").alias("dropped"),
+        )
         # idempotent commit: dynamic partition overwrite replaces exactly
         # the buckets in this chunk
         (
@@ -90,22 +137,14 @@ def run_resumable(
             .partitionBy("bucket")
             .parquet(f"{out_dir}/data")
         )
-        # ledger: per-bucket lineage + metrics, appended post-commit
-        written = spark.read.parquet(f"{out_dir}/data").filter(
-            F.col("bucket").isin(chunk)
-        )
-        ledger = written.groupBy("bucket").agg(
-            F.count("*").alias("docs"),
-            F.sum("metrics.spans_in").alias("spans_in"),
-            F.sum("metrics.spans_out").alias("spans_out"),
-            F.sum("metrics.dropped").alias("dropped"),
-        )
-        ledger = (
-            ledger.withColumn("run_id", F.lit(run_id))
-            .withColumn("committed_at", F.lit(time.time()))
-            .withColumn("chunk", F.lit(ci))
-        )
-        ledger.write.mode("append").parquet(f"{out_dir}/_progress")
+        # ledger: the chunk's observed totals, appended post-commit (a
+        # sum over no rows is NULL)
+        seen = {k: int(obs.get[k] or 0) for k in TOTALS}
+        spark.createDataFrame(
+            [(ci, chunk, run_id, time.time(), *seen.values())], LEDGER_SCHEMA
+        ).write.mode("append").parquet(f"{out_dir}/_progress")
+        for k in TOTALS:
+            totals[k] += seen[k]
         processed += 1
         if fail_after_chunks is not None and processed >= fail_after_chunks:
             raise RuntimeError(f"simulated kill after {processed} chunks")
@@ -114,6 +153,7 @@ def run_resumable(
         "buckets_total": n_buckets,
         "buckets_skipped": len(done),
         "chunks_processed": processed,
+        **totals,
     }
 
 

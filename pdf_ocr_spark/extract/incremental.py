@@ -175,11 +175,7 @@ def run_incremental(
             n_unchanged = int(acct["n_unch"] or 0)
 
         changed = input_df.join(changed_ids, "doc_id", "semi")
-        new_out = extract(
-            changed.select("doc_id", "spans"),
-            big_doc_threshold,
-            salt_partitions,
-        )
+        new_out = extract(changed, big_doc_threshold, salt_partitions)
         merged = (
             new_out if carried is None else new_out.unionByName(carried)
         )

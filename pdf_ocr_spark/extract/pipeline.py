@@ -279,6 +279,18 @@ def _extract_page_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
         yield pd.DataFrame([_flush()])
 
 
+def _valid_spans(spans: list[tuple]) -> tuple[int, list[tuple]]:
+    """(invalid count, the spans with non-NULL kind and offset). A NULL
+    offset arrives as NaN when pandas widens the column to float, so the
+    valid offsets are cast back to int."""
+    valid = [
+        (k, t, r, int(o))
+        for k, t, r, o in spans
+        if k is not None and o is not None and o == o
+    ]
+    return len(spans) - len(valid), valid
+
+
 def _extract_doc_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Doc-grain streaming extraction + reassembly (mega-doc path,
     opt-in): input rows (doc_id, page, kind, text, media_ref, offset)
@@ -289,18 +301,26 @@ def _extract_doc_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     becomes ONE flat primitive-row shuffle with NO hash aggregation
     anywhere (no page-grain collect_list, no final wide agg building
     10^6-element nested rows in the JVM heap). Trailing (possibly
-    incomplete) documents buffer across Arrow batch boundaries."""
+    incomplete) documents buffer across Arrow batch boundaries.
+
+    Spans with a NULL kind or offset are dropped under 'invalid_span',
+    as in ``_extract_batch_arrow``; the check runs only on a batch that
+    holds one. A document whose spans are all invalid still yields its
+    row, with no spans."""
     import numpy as np
 
     cur_doc: str | None = None
     cur_page: int | None = None
     cur_pages: list[list[tuple]] = []  # page runs in arrival (sorted) order
+    cur_invalid = 0
 
     def _flush() -> dict:
         spans_out: list[tuple] = []
-        si = dr = 0
-        reasons: dict[str, int] = {}
+        si = dr = cur_invalid
+        reasons: dict[str, int] = {"invalid_span": cur_invalid} if cur_invalid else {}
         for page_spans in cur_pages:
+            if not page_spans:
+                continue
             po, m = extract_pdfish_page_spans(page_spans)
             spans_out.extend(po)
             si += m["spans_in"]
@@ -326,6 +346,7 @@ def _extract_doc_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
         n = len(pdf)
         if not n:
             continue
+        dirty = pdf["kind"].hasnans or pdf["offset"].hasnans
         doc = pdf["doc_id"].to_numpy()
         page = pdf["page"].to_numpy()
         cols = [
@@ -342,7 +363,11 @@ def _extract_doc_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
         for i, j in zip(starts, starts[1:]):
             d, p = str(doc[i]), int(page[i])
             spans = list(zip(*(c[i:j].tolist() for c in cols)))
+            n_invalid = 0
+            if dirty:
+                n_invalid, spans = _valid_spans(spans)
             if cur_doc == d:
+                cur_invalid += n_invalid
                 if cur_page == p:
                     # same page split across Arrow batches: extend the
                     # open run (a page must reach its kernel whole)
@@ -354,6 +379,7 @@ def _extract_doc_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
             if cur_doc is not None:
                 out_rows.append(_flush())
             cur_doc, cur_page, cur_pages = d, p, [spans]
+            cur_invalid = n_invalid
         if out_rows:
             yield pd.DataFrame(out_rows)
     if cur_doc is not None:
@@ -391,7 +417,9 @@ def extract(
     page_stream: bool = False,
     doc_stream: bool = True,
 ) -> DataFrame:
-    """input (doc_id, spans) -> output (doc_id, spans, metrics).
+    """input (doc_id, spans[, n_spans]) -> output (doc_id, spans, metrics),
+    one output row per input row (the opt-in page-grain mega shapes drop
+    a mega doc whose spans are all invalid).
 
     ``salt_partitions``: explicit repartition by salted doc-hash before the
     UDF so a pathological input layout (e.g. all mega-docs in one input
@@ -420,25 +448,14 @@ def extract(
     (doc_id, page) + sorted run grouping → page kernels → fused wide
     agg (bounds agg memory for pathological page sizes).
     """
-    # Null tolerance (production tables are nullable — parquet/Iceberg
-    # scans don't enforce the INPUT_SCHEMA's non-null contract): a NULL
-    # _n must not make a row fall out of BOTH branch filters (NULL
-    # comparisons are neither true nor false), so coalesce to 0 — a
-    # null-spans doc then takes the small branch, where the Arrow
-    # kernel emits it with zero spans instead of crashing the job.
-    if "n_spans" in df.columns:
-        # ingest-materialized span count (sources/synthetic.py writes
-        # it): the branch predicate is now a plain column, so the
-        # parquet scan applies row-group min/max skipping per branch —
-        # the 10^12-doc shape (the computed-size fallback below can
-        # never push down)
-        df = df.withColumn(
-            "_n", F.coalesce(F.col("n_spans"), F.lit(0))
-        ).drop("n_spans")
-    else:
-        df = df.withColumn(
-            "_n", F.coalesce(F.size("spans"), F.lit(0))
-        )
+    # Branch size ``n``: the ingest-materialized ``n_spans`` when the
+    # input carries it (sources/synthetic.py writes it), else the computed
+    # ``size(spans)``. On the plain column the big branch's ``n_spans > t``
+    # reaches the parquet scan as a pushed filter, so row-group min/max
+    # stats skip the small-doc groups; a computed size never pushes down.
+    has_n = "n_spans" in df.columns
+    df = df.select("doc_id", "spans", *(["n_spans"] if has_n else []))
+    n = F.col("n_spans") if has_n else F.size("spans")
     if salt_partitions:
         # Salted repartition BEFORE the small/big branch split: both
         # branches then read the SAME shuffle stage output instead of
@@ -460,16 +477,23 @@ def extract(
     # Other corpora (html/grid/boxes/mixed) have whole-doc kernels, so an
     # over-threshold doc there must still take the whole-doc path rather
     # than be silently extracted with pdfish page semantics.
-    _pageable = F.substring_index("doc_id", "-", 1).isin("pdfish", "mega")
-    small = df.filter((F.col("_n") <= big_doc_threshold) | ~_pageable).drop("_n")
+    #
+    # Null tolerance (production tables are nullable): a NULL count is
+    # small and a NULL doc_id is not pageable, so every row passes exactly
+    # one of the two branch filters (a bare NULL comparison passes
+    # neither); the small branch's Arrow kernel emits such rows.
+    pageable = F.coalesce(
+        F.substring_index("doc_id", "-", 1).isin("pdfish", "mega"), F.lit(False)
+    )
+    small = df.filter(n.isNull() | (n <= big_doc_threshold) | ~pageable).select(
+        "doc_id", "spans"
+    )
     if use_arrow:
-        small_out = small.select("doc_id", "spans").mapInArrow(
-            _extract_batch_arrow, schema=OUTPUT_SCHEMA
-        )
+        small_out = small.mapInArrow(_extract_batch_arrow, schema=OUTPUT_SCHEMA)
     else:
         small_out = small.mapInPandas(_extract_batch, schema=OUTPUT_SCHEMA)
 
-    big = df.filter((F.col("_n") > big_doc_threshold) & _pageable).drop("_n")
+    big = df.filter((n > big_doc_threshold) & pageable).select("doc_id", "spans")
     # explode to page grain (pages are independent in the layout kernel)
     if doc_stream and not page_stream:
         # ONE flat primitive-row shuffle on doc_id, in-partition sort by
@@ -491,7 +515,7 @@ def extract(
         # flat-row shuffle + in-partition sort + streaming run grouping:
         # the ONE exchange of the mega branch carries primitive rows, and
         # page groups come off the sorted stream with no hash aggregation
-        flat = _flat_spans(big)
+        flat = _flat_spans(big).filter(_VALID_SPAN)
         if salt_partitions:
             flat = flat.repartition(salt_partitions, "doc_id", "page")
         else:
@@ -503,6 +527,7 @@ def extract(
     else:
         pages = (
             _flat_spans(big)
+            .filter(_VALID_SPAN)
             .select("doc_id", "page", F.struct(
                 "kind", "text", "media_ref", "offset").alias("s"))
             .groupBy("doc_id", "page")
@@ -517,27 +542,25 @@ def extract(
 
 
 def _flat_spans(big: DataFrame) -> DataFrame:
-    """Mega-branch explode to primitive rows with null tolerance: spans
-    whose kind or offset is NULL are filtered out pre-kernel (columnar
-    predicate on already-exploded primitives — effectively free), NULL
-    text/media_ref coerce to ''. Mirrors the small branch's
-    'invalid_span' policy except the per-doc invalid COUNT is not
-    carried (it would need an extra aggregation on the hot path); mega
-    corpora with null span fields are out-of-contract inputs and the
-    output span sequence stays correct either way.
-    """
-    return (
-        big.select("doc_id", F.explode("spans").alias("s"))
-        .filter(F.col("s.kind").isNotNull() & F.col("s.offset").isNotNull())
-        .select(
-            "doc_id",
-            (F.col("s.offset") / F.lit(1_000_000)).cast("long").alias("page"),
-            F.col("s.kind").alias("kind"),
-            F.coalesce(F.col("s.text"), F.lit("")).alias("text"),
-            F.coalesce(F.col("s.media_ref"), F.lit("")).alias("media_ref"),
-            F.col("s.offset").alias("offset"),
-        )
+    """Mega-branch explode to primitive rows. Every span survives: NULL
+    text/media_ref coerce to '' (as in the small branch), and a NULL
+    offset gets page -1, so its span sorts first in its document and
+    ``_extract_doc_stream`` counts it, like a NULL kind, as an
+    'invalid_span' drop. The opt-in page-grain shapes filter such spans
+    out with ``_VALID_SPAN`` instead and do not count them."""
+    return big.select("doc_id", F.explode("spans").alias("s")).select(
+        "doc_id",
+        F.coalesce(
+            (F.col("s.offset") / F.lit(1_000_000)).cast("long"), F.lit(-1)
+        ).alias("page"),
+        F.col("s.kind").alias("kind"),
+        F.coalesce(F.col("s.text"), F.lit("")).alias("text"),
+        F.coalesce(F.col("s.media_ref"), F.lit("")).alias("media_ref"),
+        F.col("s.offset").alias("offset"),
     )
+
+
+_VALID_SPAN = "kind IS NOT NULL AND `offset` IS NOT NULL"
 
 
 def _reassemble_columnar(big_pages: DataFrame) -> DataFrame:

@@ -14,9 +14,11 @@ Cluster usage:
     python -m pdf_ocr_spark.plans.job --input ... --output ...
 
 The job is resumable: re-running with the same --output skips buckets
-already recorded in the progress ledger (extract/checkpoint.py).  On a
-cluster, size --buckets so one bucket ~= a few GB of input and
---salt-partitions to 2-4x total executor cores.
+already recorded in the progress ledger (extract/checkpoint.py).  It
+prints one JSON summary: buckets total and skipped, chunks processed,
+and the docs, spans in, spans out and dropped spans observed in the
+chunks this run wrote.  On a cluster, size --buckets so one bucket ~= a
+few GB of input and --salt-partitions to 2-4x total executor cores.
 """
 
 from __future__ import annotations

@@ -101,11 +101,12 @@ def write_corpus_table(
     """Materialize the corpus as the engine's input table (Parquet layout;
     Iceberg via sources.catalog when jars are available).
 
-    The span count is materialized as ``n_spans`` at ingest: the
-    extraction pipeline's small/big branch predicate then rides a plain
-    column with parquet row-group min/max stats (data skipping per
-    branch) instead of a computed ``size(spans)`` that can never push
-    down — the 10^12-doc shape (extract/pipeline.py)."""
+    The span count is materialized as ``n_spans`` at ingest. When the
+    caller keeps the column (``run_resumable`` and ``run_incremental``
+    do), the mega branch's ``n_spans > threshold`` reaches the parquet
+    scan as a pushed filter, so row-group min/max stats skip the
+    small-doc groups; a computed ``size(spans)`` never pushes down
+    (extract/pipeline.py). The small branch still reads every row."""
     df = synthetic_corpus(spark, n_docs, skew_docs, seed, partitions)
     df = df.withColumn("n_spans", F.size("spans"))
     df.write.mode("overwrite").parquet(path)

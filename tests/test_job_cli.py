@@ -47,12 +47,18 @@ def test_job_end_to_end_and_resume(spark, tmp_path):
         )
     done_before = completed_buckets(spark, out)
     assert 0 < len(done_before) < 8
+    docs_before = sum(
+        r.docs for r in spark.read.parquet(f"{out}/_progress").collect()
+    )
 
     summary = run_resumable(
         spark, inp, out, n_buckets=8, chunk_buckets=2, salt_partitions=8
     )
     assert summary["buckets_skipped"] == len(done_before)
     assert read_output(spark, out).count() == 41
+    # the killed run's ledger and the resumed run's summary count every
+    # doc once
+    assert docs_before + summary["docs"] == 41
     # json-serializable summary (the CLI prints it)
     json.dumps(summary)
 
@@ -113,5 +119,6 @@ def test_spark_submit_pyfiles_subprocess(spark, tmp_path):
     )
     assert summary["buckets_total"] == 4
     assert summary["buckets_skipped"] == 0
+    assert summary["docs"] == 21
     out = spark.read.parquet(out_dir)
     assert out.select("doc_id").distinct().count() == 21

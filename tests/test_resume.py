@@ -6,11 +6,15 @@ from __future__ import annotations
 import pytest
 
 from pdf_ocr_spark.extract.checkpoint import (
+    _bucketed,
+    chunk_input,
+    chunk_partitions,
     completed_buckets,
     read_output,
     run_resumable,
 )
-from pdf_ocr_spark.sources.synthetic import synthetic_corpus
+from pdf_ocr_spark.extract.pipeline import extract
+from pdf_ocr_spark.sources.synthetic import synthetic_corpus, write_corpus_table
 
 from .conftest import rows_to_tuples
 
@@ -44,7 +48,7 @@ def test_kill_and_resume(spark, tmp_path):
 
     # ledger has no duplicate buckets and the output matches the one-shot run
     ledger = spark.read.parquet(f"{out_dir}/_progress")
-    buckets = [r.bucket for r in ledger.select("bucket").collect()]
+    buckets = [b for r in ledger.select("buckets").collect() for b in r.buckets]
     assert len(buckets) == len(set(buckets)) == 8
     assert _spans_by_doc(read_output(spark, out_dir)) == expected
 
@@ -73,3 +77,81 @@ def test_ledger_probe_missing_partial_and_corrupt(spark, tmp_path):
     (tmp_path / "out" / "_progress" / "part-0.parquet").write_bytes(b"junk")
     with pytest.raises(Exception, match="part-0.parquet"):
         completed_buckets(spark, out_dir)
+
+
+@pytest.mark.spark
+def test_ledger_rows_equal_their_committed_rows(spark, tmp_path):
+    """Each ledger row's observed totals equal the committed ``data/``
+    rows of its buckets, over an input with a mega doc (doc-stream
+    branch) and a dirty doc; the rows' buckets cover every bucket once,
+    and the summary's totals are the ledger's."""
+    from pyspark.sql import functions as F
+
+    nullable = (
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>"
+    )
+    dirty = spark.createDataFrame(
+        [("pdfish-990002", [("text", "a", None, 0), (None, "b", None, 1),
+                            ("text", "c", None, 1_000_000)])],
+        nullable,
+    )
+    path = str(tmp_path / "in")
+    (
+        synthetic_corpus(spark, 40, skew_docs=1)
+        .unionByName(dirty)
+        .withColumn("n_spans", F.size("spans"))
+        .write.parquet(path)
+    )
+    out_dir = str(tmp_path / "out")
+    summary = run_resumable(
+        spark, spark.read.parquet(path), out_dir, n_buckets=8, chunk_buckets=2
+    )
+
+    data = spark.read.parquet(f"{out_dir}/data")
+    per_bucket = {
+        r.bucket: r
+        for r in data.groupBy("bucket").agg(
+            F.count("*").alias("docs"),
+            F.sum("metrics.spans_in").alias("spans_in"),
+            F.sum("metrics.spans_out").alias("spans_out"),
+            F.sum("metrics.dropped").alias("dropped"),
+        ).collect()
+    }
+    ledger = spark.read.parquet(f"{out_dir}/_progress").collect()
+    assert len(ledger) == 4
+    totals = ("docs", "spans_in", "spans_out", "dropped")
+    for row in ledger:
+        for k in totals:
+            want = sum(per_bucket[b][k] for b in row.buckets if b in per_bucket)
+            assert row[k] == want, (row.chunk, k)
+    assert sorted(b for r in ledger for b in r.buckets) == list(range(8))
+    assert summary["docs"] == 42
+    for k in totals:
+        assert summary[k] == sum(r[k] for r in ledger), k
+
+
+def test_chunk_partitions_rule():
+    """A chunk gets its share of the input's partitions, floored at the
+    default parallelism and capped at the input's partition count."""
+    assert chunk_partitions(8, 8, 16, 2) == 4
+    for n_in in (1, 2, 5, 8, 64):
+        for chunk in (1, 3, 8, 16):
+            for par in (1, 2, 4, 16):
+                n = chunk_partitions(n_in, chunk, 16, par)
+                assert min(n_in, par) <= n <= n_in
+
+
+@pytest.mark.spark
+def test_mega_branch_predicate_reaches_the_scan(spark, tmp_path):
+    """Over an ingest table with ``n_spans``, the chunk's mega branch
+    pushes ``n_spans > 4000`` into the parquet scan (read from the
+    executed plan; no Spark job runs it)."""
+    path = str(tmp_path / "in")
+    write_corpus_table(spark, path, n_docs=12)
+    work = _bucketed(spark.read.parquet(path), 16)
+    plan = (
+        extract(chunk_input(work, list(range(8)), 16, n_in=8))
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "GreaterThan(n_spans,4000)" in plan

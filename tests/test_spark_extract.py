@@ -154,3 +154,55 @@ def test_dirty_nullable_table_tolerance(spark, tmp_path):
     _assert_golden(
         [r for r in out.values() if r["doc_id"] in clean_ids], clean_ids
     )
+
+
+@pytest.mark.spark
+def test_dirty_rows_equal_on_both_branches(spark, tmp_path):
+    """The dirty rows give the same rows and metrics whether they take
+    the small branch (the default threshold) or the mega branch
+    (threshold 1): a doc whose spans are all invalid keeps its row, a
+    partly invalid one counts its invalid span, and a NULL doc_id with
+    more spans than the threshold stays in the small branch."""
+    from pyspark.sql import functions as F
+
+    def span(kind, offset, text="x"):
+        return {"kind": kind, "text": text, "media_ref": None, "offset": offset}
+
+    rows = [
+        {"doc_id": "null-spans", "spans": None},
+        {"doc_id": "empty-spans", "spans": []},
+        # both spans invalid: one NULL kind, one NULL offset
+        {"doc_id": "pdfish-990001",
+         "spans": [span(None, 0), span("text", None, None)]},
+        # one invalid span of four, on two pages, one NULL text
+        {"doc_id": "pdfish-990002",
+         "spans": [span("text", 1_002_003, "kept"), span(None, 5),
+                   span("text", 4_005, "also kept"), span("text", 6, None)]},
+        {"doc_id": None, "spans": [span("text", 0, "a"), span("text", 1, "b")]},
+    ]
+    nullable = (
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>"
+    )
+    path = str(tmp_path / "dirty")
+    (
+        spark.createDataFrame(rows, nullable)
+        .withColumn("n_spans", F.when(F.col("spans").isNotNull(), F.size("spans")))
+        .write.parquet(path)
+    )
+    inp = spark.read.parquet(path)
+
+    def run(threshold):
+        return sorted(
+            extract(inp, big_doc_threshold=threshold).collect(),
+            key=lambda r: r.doc_id,
+        )
+
+    small, big = run(4000), run(1)
+    assert len(small) == len(rows)
+    assert big == small
+    m = {r.doc_id: r.metrics for r in small}
+    assert (m["pdfish-990001"].spans_in, m["pdfish-990001"].dropped) == (2, 2)
+    assert dict(m["pdfish-990001"].drop_reasons) == {"invalid_span": 2}
+    assert m["pdfish-990002"].spans_in == 4
+    assert dict(m["pdfish-990002"].drop_reasons)["invalid_span"] == 1
