@@ -55,6 +55,13 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
 
 
+def delete_path(spark: SparkSession, path: str) -> None:
+    """Recursive delete through the same Hadoop FileSystem as
+    ``path_exists``; a missing path is not an error."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
+
+
 def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
     """Buckets listed by a ledger row. No ledger means a fresh run; a
     ledger that exists but cannot be read raises. The schema is given, so
@@ -97,7 +104,6 @@ def run_resumable(
     n_buckets: int = 32,
     chunk_buckets: int = 8,
     big_doc_threshold: int = BIG_DOC_THRESHOLD,
-    salt_partitions: int | None = None,
     fail_after_chunks: int | None = None,
     run_id: str | None = None,
 ) -> dict:
@@ -119,9 +125,7 @@ def run_resumable(
     processed = 0
     for ci, chunk in enumerate(chunks):
         chunk_df = chunk_input(work, chunk, n_buckets, n_in)
-        out = _bucketed(
-            extract(chunk_df, big_doc_threshold, salt_partitions), n_buckets
-        )
+        out = _bucketed(extract(chunk_df, big_doc_threshold), n_buckets)
         obs = Observation()
         out = out.observe(
             obs,

@@ -17,7 +17,9 @@ re-running the full extraction is not an option.  The incremental job
      no span recompute);
   4. writes the merged output + refreshed manifest in the same
      ``<out>/data`` layout ``checkpoint.read_output`` reads, so
-     incremental runs compose with each other and with resume.
+     incremental runs compose with each other and with resume. The
+     manifest is deleted before and written after the data, so only a
+     completed refresh leaves one.
 
 Scale shape: two scans (new corpus, previous output), one equi-join
 grain per step, extraction cost proportional to |changed| — never to
@@ -29,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .checkpoint import _bucketed, path_exists, read_output
+from .checkpoint import _bucketed, delete_path, path_exists, read_output
 from .pipeline import BIG_DOC_THRESHOLD, extract
 
 
@@ -57,7 +59,6 @@ def run_incremental(
     prev_dir: str | None = None,
     n_buckets: int = 32,
     big_doc_threshold: int = BIG_DOC_THRESHOLD,
-    salt_partitions: int | None = None,
     check_unique: bool = False,
 ) -> dict:
     """Extract ``input_df`` into ``out_dir``, reusing ``prev_dir``'s
@@ -175,7 +176,7 @@ def run_incremental(
             n_unchanged = int(acct["n_unch"] or 0)
 
         changed = input_df.join(changed_ids, "doc_id", "semi")
-        new_out = extract(changed, big_doc_threshold, salt_partitions)
+        new_out = extract(changed, big_doc_threshold)
         merged = (
             new_out if carried is None else new_out.unionByName(carried)
         )
@@ -189,6 +190,12 @@ def run_incremental(
         # grain (n_buckets tasks, identical at any cluster width) and
         # bounds the tree to one file per bucket.
         out = _bucketed(merged, n_buckets).repartition(n_buckets, "bucket")
+        # A reused out_dir holds an older snapshot's manifest. Drop it
+        # before the data write, so a refresh killed between the two
+        # writes leaves a snapshot with no manifest (the next refresh
+        # from it runs cold) instead of new data beside a stale
+        # manifest (the next refresh would carry deleted docs back).
+        delete_path(spark, f"{out_dir}/_manifest")
         (
             out.write.mode("overwrite")
             # STATIC overwrite, explicitly: this is a full-snapshot write,

@@ -39,40 +39,9 @@ OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-PAGE_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("page", T.LongType(), False),
-        T.StructField("spans", T.ArrayType(SPAN_STRUCT), False),
-        T.StructField("metrics", METRICS_STRUCT, False),
-    ]
-)
-
 
 def span_dicts(spans: list[tuple]) -> list[dict]:
     return [
         {"kind": k, "text": t, "media_ref": m, "offset": int(o)}
         for k, t, m, o in spans
     ]
-
-
-def span_tuples(spans) -> list[tuple]:
-    """Arrow/pandas cell (list/ndarray of dicts or Rows) -> kernel tuples."""
-    out = []
-    for s in spans:
-        if isinstance(s, dict):
-            out.append(
-                (s["kind"], s.get("text"), s.get("media_ref"), int(s["offset"]))
-            )
-        else:  # pyspark Row
-            out.append((s.kind, s.text, s.media_ref, int(s.offset)))
-    return out
-
-
-def metrics_dict(m: dict) -> dict:
-    return {
-        "spans_in": int(m["spans_in"]),
-        "spans_out": int(m["spans_out"]),
-        "dropped": int(m["dropped"]),
-        "drop_reasons": {k: int(v) for k, v in m["drop_reasons"].items()},
-    }

@@ -1,7 +1,7 @@
 """Shared span/metrics types for the extraction kernels.
 
 Kernels are PURE Python — no Spark imports — so that the exact same code
-runs (a) inside vectorized pandas UDF batches on executors and (b) in the
+runs (a) inside vectorized Arrow batches on executors and (b) in the
 single-process pytest oracle. Golden span-sequence equality
 ``(kind, text, media_ref, order)`` between the two is the correctness
 contract (BASELINE.json north_rule).

@@ -39,8 +39,7 @@ def extract_mixed(spans: list[tuple], contract: dict | None = None) -> tuple[lis
 
     Input offsets are a monotone sequence index (FIXTURES.md corpus 3);
     output preserves that order, re-sequenced 0..n-1. Media spans pass
-    through untouched (the Spark layer routes them around the text UDF —
-    north_rule media-heavy span separation)."""
+    through untouched, in place among the text spans."""
     contract = contract or DEFAULT_CONTRACT
     valid = set(contract.get("valid_values", []))
     enum_field = contract.get("enum_pattern", "grade")
@@ -75,49 +74,3 @@ def extract_mixed(spans: list[tuple], contract: dict | None = None) -> tuple[lis
     if missing:
         drop(metrics, "missing_required_field", len(missing))
     return finalize(out, metrics)
-
-
-def extract_mixed_text(
-    spans: list[tuple], contract: dict | None = None
-) -> tuple[list, dict]:
-    """Media-routing variant: process ONLY text spans, keep ORIGINAL
-    offsets (no re-sequencing) so the Spark layer can interleave routed
-    media spans back columnar-side via ``array_sort`` by offset and then
-    re-sequence 0..n-1 (extract.pipeline.extract_routed_media). Feeding
-    the text-only subset here plus the media subset through the merge is
-    exactly equivalent to ``extract_mixed`` on the full span list."""
-    contract = contract or DEFAULT_CONTRACT
-    valid = set(contract.get("valid_values", []))
-    enum_field = contract.get("enum_pattern", "grade")
-    required = set(contract.get("required_fields", []))
-    metrics = new_metrics(len(spans))
-
-    seen_fields: set[str] = set()
-    out: list[tuple[str, str, str, int]] = []
-    for kind, text, ref, off in sorted(spans, key=lambda s: s[3]):
-        if kind == "media":  # defensive: routed input should have none
-            out.append((KIND_MEDIA, "", ref or "", off))
-            continue
-        norm = normalize_text(text or "")
-        if not norm:
-            drop(metrics, "empty")
-            continue
-        m = _FIELD_RE.match(norm)
-        if m:
-            field, value = m.group(1), m.group(2)
-            seen_fields.add(field)
-            if field == enum_field:
-                if value not in valid:
-                    drop(metrics, "invalid_value")
-                    continue
-                out.append((KIND_TEXT, f"{field}: {value}", "", off))
-                continue
-            out.append((KIND_TEXT, f"{field}: {coerce_value(value)}", "", off))
-            continue
-        out.append((KIND_TEXT, coerce_value(norm), "", off))
-
-    missing = required - seen_fields
-    if missing:
-        drop(metrics, "missing_required_field", len(missing))
-    metrics["spans_out"] = len(out)
-    return out, metrics

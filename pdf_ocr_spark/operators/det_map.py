@@ -1,7 +1,7 @@
 """Deterministic dimension/measure schema mapping (SURVEY.md §2.9).
 
 Re-expresses (NOT ports) the reference's deterministic unpivot mapping
-(docpact interpret.py:1335-1618) as pure DataFrame operators over a
+(docpact interpret.py:1335-1618) as DataFrame operators over a
 long-format cell stream:
 
   Phase 2  column classification  (interpret.py:1335-1361)
@@ -24,20 +24,23 @@ long-format cell stream:
            one record per (data row x group): shared cells + the
            group's dimension header-values + constants + measure cells.
 
-Composed elsewhere / opt-in: blank-header inference (interpret.py:1440-1460)
-is :func:`infer_blank_header_shared`; the re-classify branch for
-measure-less compound label columns (1504-1526) is
-:func:`reclassify_label_columns` — inherently sequential per document
-(each promotion's constants feed the next column's coverage check), so
-it runs as a HEADER-GRAIN mapInPandas over per-doc candidate arrays,
-the kernel pattern (§2.11), never touching the cell stream.
+Phase 2's part classification is a broadcast join
+(:func:`classify_parts`). The per-document role decisions of phases 2-3
+— shared columns, group and constant dimensions, groups and the
+implicit group — run in :func:`roles_kernel`, ONE header-grain
+mapInPandas over per-doc part arrays, the kernel pattern (§2.11). So
+does the opt-in re-classify branch for measure-less compound label
+columns (interpret.py:1504-1526), which is sequential per document
+(each promotion's constants feed the next column's coverage check).
+Blank-header inference (interpret.py:1440-1460, opt-in) is
+:func:`infer_blank_header_shared`.
 
-Scale shape: every rule is an aggregation or join at HEADER grain
-(columns-per-doc rows — orders of magnitude smaller than the cell
-stream). The cell stream is touched exactly twice: two equi-joins on
-(doc_id, col_idx) against header-grain role tables, then ONE shuffle —
-the groupBy(doc_id, row_id, group_key) record pivot, which is the
-output cardinality itself. No collect, no driver loop, no per-row UDF.
+Scale shape: every rule runs at HEADER grain (columns-per-doc rows —
+orders of magnitude smaller than the cell stream). The cell stream is
+touched exactly twice: two equi-joins on (doc_id, col_idx) against
+header-grain role tables, then ONE shuffle — the groupBy(doc_id,
+row_id, group_key) record pivot, which is the output cardinality
+itself. No collect, no driver loop, no per-row UDF.
 """
 
 from __future__ import annotations
@@ -102,102 +105,6 @@ def classify_parts(headers: DataFrame, aliases: DataFrame) -> DataFrame:
         "doc_id", "col_idx", "pi", "part", "canonical", "type",
         role.alias("role"),
     )
-
-
-def column_roles(classified: DataFrame) -> dict[str, DataFrame]:
-    """Phase 2/3 role tables from `classify_parts` output — all at
-    header grain. Returns {'shared','group_names','const_dims','groups',
-    'group_dims','group_measures'}; group_key is the sorted
-    'name=value'-vector of the column's group dimensions ('' when the
-    column has none — the implicit single group)."""
-    # header-grain (columns-per-doc rows): six role tables branch off
-    # this one relation. Deliberately NOT persisted — caching a
-    # layout-catalog-sized relation costs more (materialization jobs,
-    # broken exchange reuse) than recomputing the cheap lineage per
-    # branch; Catalyst reuses identical exchanges across branches.
-    # shared: single-part columns, >=1 match, all matches dimension-type
-    per_col = classified.groupBy("doc_id", "col_idx").agg(
-        F.max("pi").alias("max_pi"),
-        F.sum(F.when(F.col("canonical").isNotNull(), 1).otherwise(0)).alias(
-            "n_match"
-        ),
-        F.sum(F.when(F.col("role") == "measure", 1).otherwise(0)).alias(
-            "n_meas"
-        ),
-        # the reference takes col_parts[0][1][0]; min() is its
-        # deterministic stand-in for the first matched column
-        F.min(F.when(F.col("role") == "dim", F.col("canonical"))).alias(
-            "canonical"
-        ),
-    )
-    shared = per_col.filter(
-        (F.col("max_pi") == 0) & (F.col("n_match") >= 1) & (F.col("n_meas") == 0)
-    ).select("doc_id", "col_idx", "canonical")
-
-    dims = classified.filter(F.col("role") == "dim").select(
-        "doc_id", "col_idx", "canonical", F.col("part").alias("value")
-    )
-    dv = dims.groupBy("doc_id", "canonical").agg(
-        F.countDistinct("value").alias("n_vals"),
-        F.count("*").alias("n_entries"),
-        F.min("value").alias("value"),
-    )
-    group_names = dv.filter(F.col("n_vals") >= 2).select("doc_id", "canonical")
-    const_dims = dv.filter(
-        (F.col("n_vals") == 1) & (F.col("n_entries") >= 2)
-    ).select("doc_id", "canonical", "value")
-
-    # group-key vector per non-shared column
-    not_shared = classified.join(
-        shared.select("doc_id", "col_idx"), ["doc_id", "col_idx"], "left_anti"
-    )
-    col_gdims = (
-        not_shared.filter(F.col("role") == "dim")
-        .join(group_names, ["doc_id", "canonical"])
-        .select("doc_id", "col_idx", "canonical", F.col("part").alias("value"))
-        .distinct()
-    )
-    gk = col_gdims.groupBy("doc_id", "col_idx").agg(
-        F.concat_ws(
-            "|",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("canonical", "value"))),
-                lambda s: F.concat_ws("=", s["canonical"], s["value"]),
-            ),
-        ).alias("group_key")
-    )
-
-    measures = not_shared.filter(F.col("role") == "measure").select(
-        "doc_id", "col_idx", "canonical"
-    )
-    # a column participates iff it has group dims or measures
-    member_cols = (
-        gk.select("doc_id", "col_idx")
-        .union(measures.select("doc_id", "col_idx"))
-        .distinct()
-    )
-    keyed = member_cols.join(gk, ["doc_id", "col_idx"], "left").select(
-        "doc_id", "col_idx", F.coalesce("group_key", F.lit("")).alias("group_key")
-    )
-    groups = keyed.select("doc_id", "group_key").distinct()
-    group_measures = measures.join(keyed, ["doc_id", "col_idx"]).select(
-        "doc_id", "group_key", "col_idx", "canonical"
-    )
-    # the group's dimension values: its own group dims + every constant
-    group_dims = (
-        col_gdims.join(keyed, ["doc_id", "col_idx"])
-        .select("doc_id", "group_key", "canonical", "value")
-        .distinct()
-        .union(groups.join(const_dims, "doc_id"))
-    )
-    return {
-        "shared": shared,
-        "group_names": group_names,
-        "const_dims": const_dims,
-        "groups": groups,
-        "group_dims": group_dims,
-        "group_measures": group_measures,
-    }
 
 
 def infer_blank_header_shared(
@@ -276,112 +183,6 @@ def infer_blank_header_shared(
     )
 
 
-def reclassify_label_columns(
-    classified: DataFrame, shared: DataFrame, group_names: DataFrame,
-    const_dims: DataFrame,
-) -> DataFrame:
-    """Re-classify measure-less compound label columns
-    (interpret.py:1504-1526 semantics): a non-shared column with only
-    non-group dimensions and no measures, whose dimensions are not all
-    covered by existing constants/shared columns, promotes its LAST
-    dimension part to a shared column (cell value) and the earlier
-    parts to constant dimensions. Promotions accumulate left-to-right —
-    an earlier column's new constants can fully cover a later column,
-    which is then skipped — so the rule is sequential per document.
-    Runs as one mapInPandas over per-doc candidate arrays (header
-    grain, a handful of rows per doc, zero cell-stream involvement).
-
-    Returns tagged rows: kind 's' -> new shared (doc_id, col_idx,
-    canonical); kind 'c' -> new constant (doc_id, canonical, value).
-    Within one part, multi-match ordering uses canonical sort (the
-    same deterministic stand-in as the shared-column pick)."""
-    import pandas as pd
-
-    not_shared = classified.join(
-        shared.select("doc_id", "col_idx").distinct(),
-        ["doc_id", "col_idx"],
-        "left_anti",
-    )
-    dim_rows = not_shared.filter(F.col("role") == "dim")
-    has_gdim = (
-        dim_rows.join(group_names, ["doc_id", "canonical"])
-        .select("doc_id", "col_idx")
-        .distinct()
-    )
-    percol = not_shared.groupBy("doc_id", "col_idx").agg(
-        F.sum(F.when(F.col("role") == "measure", 1).otherwise(0)).alias(
-            "n_meas"
-        ),
-        F.sum(F.when(F.col("role") == "dim", 1).otherwise(0)).alias("n_dims"),
-    )
-    cand = (
-        percol.filter((F.col("n_meas") == 0) & (F.col("n_dims") > 0))
-        .join(has_gdim, ["doc_id", "col_idx"], "left_anti")
-        .select("doc_id", "col_idx")
-    )
-    cdims = dim_rows.join(cand, ["doc_id", "col_idx"]).select(
-        "doc_id", "col_idx", "pi", "canonical", F.col("part").alias("value")
-    )
-    per_doc = cdims.groupBy("doc_id").agg(
-        F.array_sort(
-            F.collect_list(F.struct("col_idx", "pi", "canonical", "value"))
-        ).alias("dims")
-    )
-    cn = const_dims.groupBy("doc_id").agg(
-        F.collect_list("canonical").alias("const_names")
-    )
-    sn = shared.groupBy("doc_id").agg(
-        F.collect_list("canonical").alias("shared_names")
-    )
-    joined = per_doc.join(cn, "doc_id", "left").join(sn, "doc_id", "left")
-
-    def fn(batches):
-        for pdf in batches:
-            out: dict = {
-                "doc_id": [], "kind": [], "col_idx": [],
-                "canonical": [], "value": [],
-            }
-
-            def emit(doc, kind, col, canonical, value):
-                out["doc_id"].append(doc)
-                out["kind"].append(kind)
-                out["col_idx"].append(col)
-                out["canonical"].append(canonical)
-                out["value"].append(value)
-
-            for doc, dims, cns, sns in zip(
-                pdf["doc_id"], pdf["dims"], pdf["const_names"],
-                pdf["shared_names"],
-            ):
-                const_set = set(cns if cns is not None else [])
-                covered = const_set | set(sns if sns is not None else [])
-                bycol: dict = {}
-                for d in dims:
-                    bycol.setdefault(d["col_idx"], []).append(d)
-                for col in sorted(bycol):
-                    dd = sorted(
-                        bycol[col],
-                        key=lambda x: (x["pi"], x["canonical"], x["value"]),
-                    )
-                    if all(x["canonical"] in covered for x in dd):
-                        continue
-                    *consts, last = dd
-                    emit(doc, "s", int(col), last["canonical"], None)
-                    covered.add(last["canonical"])
-                    for x in consts:
-                        if x["canonical"] not in const_set:
-                            emit(doc, "c", None, x["canonical"], x["value"])
-                            const_set.add(x["canonical"])
-                            covered.add(x["canonical"])
-            yield pd.DataFrame(out)
-
-    return joined.mapInPandas(
-        fn,
-        schema="doc_id string, kind string, col_idx int, "
-        "canonical string, value string",
-    )
-
-
 def roles_kernel(
     classified: DataFrame, inferred_shared: DataFrame | None = None,
     reclassify: bool = False,
@@ -389,17 +190,21 @@ def roles_kernel(
     """Phases 2-3 + the implicit group + (optionally) the re-classify
     promotion as ONE per-document header-grain mapInPandas — the same
     per-doc sequential shape as the reference's interpret loop
-    (interpret.py:1335-1618 runs per document by construction).
+    (interpret.py:1335-1618 runs per document by construction; the
+    randomized-layout test pins it to a sequential oracle).
 
-    Semantically identical to composing :func:`column_roles` +
-    :func:`reclassify_label_columns` + the implicit-group union (the
-    randomized-layout test pins both paths to the sequential oracle),
-    but the plan is ONE narrow shuffle on doc_id over columns-per-doc
-    rows instead of six role branches that each replay a multi-stage
-    lineage per broadcast — at contract scale (tiny layout catalogs)
-    that lineage replay dominated wall time; at 10^12-doc scale the
-    single hash exchange is also the right shape because role decisions
-    are per-doc local.
+    The plan is ONE narrow shuffle on doc_id over columns-per-doc rows.
+    Role decisions are per-doc local, and a relational formulation
+    (six role tables, each replaying a multi-stage lineage per
+    broadcast) measured slower at contract scale.
+
+    ``reclassify`` adds the re-classify branch for measure-less compound
+    label columns (interpret.py:1504-1526): a non-shared column with
+    only non-group dimensions and no measures, whose dimensions are not
+    all covered by existing constants/shared columns, promotes its LAST
+    dimension part to a shared column (cell value) and the earlier parts
+    to constant dimensions. Promotions accumulate left-to-right, so the
+    rule is sequential per document.
 
     Returns tagged rows (doc_id, kind, col_idx, group_key, canonical,
     value): kind 's' = shared column, 'g' = group, 'm' = group measure
@@ -543,18 +348,15 @@ def roles_kernel(
 def map_deterministic(
     cells: DataFrame, headers: DataFrame, aliases: DataFrame,
     record_cols: list[str], infer_blank: bool = False,
-    reclassify: bool = False, role_kernel: bool = True,
+    reclassify: bool = False,
 ) -> DataFrame:
     """cells(doc_id, row_id, col_idx, cell) + headers(doc_id, col_idx,
     header) -> one record per (data row x unpivot group):
     (doc_id, row_id, group_key, *record_cols) — phase-4 semantics,
     interpret.py:1583-1618. Unpopulated fields are null.
 
-    ``role_kernel`` (default) computes the header-grain role tables via
-    :func:`roles_kernel` — one narrow doc_id shuffle instead of six
-    relational branches replaying their lineage per broadcast; pass
-    False for the pure-relational path (:func:`column_roles`), which the
-    tests cross-check against the same sequential oracle.
+    The header-grain role tables come from :func:`roles_kernel`, one
+    narrow doc_id shuffle.
 
     The header-grain role tables are broadcast (columns-per-doc
     cardinality; for contract-driven extraction this is a few rows per
@@ -573,87 +375,37 @@ def map_deterministic(
     single-category-skip analogue (SURVEY §4): the inference is
     vacuous when no layout has a blank header, and skipping it keeps
     the vacuous subtree out of the plan. ``reclassify`` likewise adds
-    the sequential label-column promotion
-    (:func:`reclassify_label_columns`): its new shared columns feed
-    the cell joins, its new constants feed every group like phase-3
-    constants."""
+    the sequential label-column promotion (see :func:`roles_kernel`):
+    its new shared columns feed the cell joins, its new constants feed
+    every group like phase-3 constants."""
     classified = classify_parts(headers, aliases)
-    if role_kernel:
-        inferred = (
-            infer_blank_header_shared(cells, headers, classified, aliases)
-            if infer_blank
-            else None
-        )
-        roles = roles_kernel(classified, inferred, reclassify)
-        # Materialize the header-grain roles ONCE and truncate lineage
-        # (localCheckpoint, not .persist): every downstream slice rides
-        # a broadcast, and each broadcast job would otherwise replay
-        # the classify+kernel lineage — and even a filled cache drags
-        # the full upstream plan through analysis/canonicalization per
-        # reference (measured as driver-side gaps with zero jobs
-        # running when the headers derive from an extraction
-        # pipeline). Header grain keeps this KB-sized per layout
-        # catalog; blocks are freed by the ContextCleaner when the
-        # consuming DataFrames are dropped.
-        roles = roles.localCheckpoint(eager=True)
-        k = F.col("kind")
-        shared = roles.filter(k == "s").select("doc_id", "col_idx", "canonical")
-        groups = roles.filter(k == "g").select("doc_id", "group_key")
-        group_measures = roles.filter(k == "m").select(
-            "doc_id", "group_key", "col_idx", "canonical"
-        )
-        group_dims = roles.filter(k == "d").select(
-            "doc_id", "group_key", "canonical", "value"
-        )
-        return _pivot_records(
-            cells, shared, groups, group_measures, group_dims, record_cols
-        )
-    r = column_roles(classified)
-    shared = r["shared"]
-    group_dims = r["group_dims"]
-    promoted_consts = None
-    if infer_blank:
-        shared = shared.unionByName(
-            infer_blank_header_shared(cells, headers, classified, aliases)
-        )
-    if reclassify:
-        promoted = reclassify_label_columns(
-            classified, shared, r["group_names"], r["const_dims"]
-        )
-        shared = shared.unionByName(
-            promoted.filter(F.col("kind") == "s").select(
-                "doc_id", "col_idx", "canonical"
-            )
-        )
-        promoted_consts = promoted.filter(F.col("kind") == "c").select(
-            "doc_id", "canonical", "value"
-        )
-    # Implicit single group for shared-only documents (interpret.py:
-    # 1531-1537): when a doc has NO group dimensions anywhere and no
-    # member columns, but does have shared columns, the reference still
-    # emits one record per data row (shared values + constants). Docs
-    # whose group dimensions live only in shared columns take the
-    # reference's grouped path and form no groups — excluded here too.
-    implicit = (
-        shared.select("doc_id")
-        .distinct()
-        .join(r["groups"].select("doc_id").distinct(), "doc_id", "left_anti")
-        .join(
-            r["group_names"].select("doc_id").distinct(), "doc_id", "left_anti"
-        )
-        .select("doc_id", F.lit("").alias("group_key"))
+    inferred = (
+        infer_blank_header_shared(cells, headers, classified, aliases)
+        if infer_blank
+        else None
     )
-    groups = r["groups"].unionByName(implicit)
-    group_dims = group_dims.unionByName(
-        implicit.join(r["const_dims"], "doc_id").select(
-            "doc_id", "group_key", "canonical", "value"
-        )
+    roles = roles_kernel(classified, inferred, reclassify)
+    # Materialize the header-grain roles ONCE and truncate lineage
+    # (localCheckpoint, not .persist): every downstream slice rides a
+    # broadcast, and each broadcast job would otherwise replay the
+    # classify+kernel lineage — and even a filled cache drags the full
+    # upstream plan through analysis/canonicalization per reference
+    # (measured as driver-side gaps with zero jobs running when the
+    # headers derive from an extraction pipeline). Header grain keeps
+    # this KB-sized per layout catalog; blocks are freed by the
+    # ContextCleaner when the consuming DataFrames are dropped.
+    roles = roles.localCheckpoint(eager=True)
+    k = F.col("kind")
+    shared = roles.filter(k == "s").select("doc_id", "col_idx", "canonical")
+    groups = roles.filter(k == "g").select("doc_id", "group_key")
+    group_measures = roles.filter(k == "m").select(
+        "doc_id", "group_key", "col_idx", "canonical"
     )
-    if promoted_consts is not None:
-        # promoted constants apply to every group, like phase-3 constants
-        group_dims = group_dims.union(groups.join(promoted_consts, "doc_id"))
+    group_dims = roles.filter(k == "d").select(
+        "doc_id", "group_key", "canonical", "value"
+    )
     return _pivot_records(
-        cells, shared, groups, r["group_measures"], group_dims, record_cols
+        cells, shared, groups, group_measures, group_dims, record_cols
     )
 
 

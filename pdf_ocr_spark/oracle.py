@@ -1,30 +1,16 @@
 """Single-process pure-Python oracle for golden span equality.
 
-The oracle calls the SAME kernel functions the Spark pandas UDFs call
-(SURVEY.md §7.0 kernel/shell split), so pytest can assert per-document
-span-sequence equality ``(kind, text, media_ref, order)`` between the
-Spark pipeline output and this reference evaluation without Spark.
+The oracle calls the SAME kernel functions, through the same dispatch
+table (``kernels.KERNELS``), as the Spark Arrow batches (SURVEY.md §7.0
+kernel/shell split), so pytest can assert per-document span-sequence
+equality ``(kind, text, media_ref, order)`` between the Spark pipeline
+output and this reference evaluation without Spark.
 """
 
 from __future__ import annotations
 
 from .corpus import corpus_of, generate_doc
-from .kernels.boxish import extract_boxish
-from .kernels.flowk import extract_flow_doc
-from .kernels.gridk import extract_grid_doc
-from .kernels.htmlk import extract_html_doc
-from .kernels.mixed import extract_mixed
-from .kernels.pdfish import extract_pdfish
-
-KERNELS = {
-    "pdfish": extract_pdfish,
-    "mega": extract_pdfish,
-    "html": extract_html_doc,
-    "mixed": extract_mixed,
-    "grid": extract_grid_doc,
-    "boxes": extract_boxish,
-    "flow": extract_flow_doc,
-}
+from .kernels import KERNELS
 
 
 def extract_document(doc_id: str, spans: list[tuple]) -> tuple[list, dict]:

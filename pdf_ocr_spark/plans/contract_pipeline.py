@@ -201,12 +201,10 @@ def run_contract_pipeline(
     contract: dict,
     input_df: DataFrame,
     out_dir: str | None = None,
-    salt_partitions: int | None = None,
-    persist_grid: bool = True,
 ) -> dict[str, DataFrame]:
     """Run extract -> map -> validate; optionally write the three output
     tables. Returns {"records", "metrics", "report"} DataFrames."""
-    extracted = extract(input_df, salt_partitions=salt_partitions)
+    extracted = extract(input_df)
     blocked = _blocked_spans(extracted)
     # The blocked flat-span relation feeds MANY downstream consumers
     # (header block, cell grid x3 in the record pivot, roles-kernel
@@ -219,24 +217,23 @@ def run_contract_pipeline(
     # extraction output is a parquet table; this is its in-memory
     # analogue). Blocks are freed by the ContextCleaner once the
     # returned DataFrames are dropped.
-    if persist_grid:
-        # localCheckpoint (not .persist): materializes AND truncates
-        # lineage. The extraction plan below this point is large, and
-        # every downstream reference to a plain .persist would drag it
-        # through analysis/cache-canonicalization again — measured as
-        # multi-second driver-side gaps with zero jobs running. After
-        # the checkpoint the logical plan is a block scan.
-        blocked = blocked.localCheckpoint(eager=True)
+    #
+    # localCheckpoint (not .persist): materializes AND truncates
+    # lineage. The extraction plan below this point is large, and every
+    # downstream reference to a plain .persist would drag it through
+    # analysis/cache-canonicalization again — measured as multi-second
+    # driver-side gaps with zero jobs running. After the checkpoint the
+    # logical plan is a block scan.
+    blocked = blocked.localCheckpoint(eager=True)
     hdrs, grid = _grid_from_blocked(blocked)
-    if persist_grid:
-        # hdrs/grid are also each consumed by several branches (cells
-        # x3 in validation, x4 in the record pivot; headers by the
-        # alias mapping and every roles broadcast). They materialize
-        # from the checkpointed blocked relation — extraction still
-        # runs exactly once — and checkpointing them keeps the
-        # per-block window shuffles from replaying per consumer.
-        hdrs = hdrs.localCheckpoint(eager=True)
-        grid = grid.localCheckpoint(eager=True)
+    # hdrs/grid are also each consumed by several branches (cells x3 in
+    # validation, x4 in the record pivot; headers by the alias mapping
+    # and every roles broadcast). They materialize from the checkpointed
+    # blocked relation — extraction still runs exactly once — and
+    # checkpointing them keeps the per-block window shuffles from
+    # replaying per consumer.
+    hdrs = hdrs.localCheckpoint(eager=True)
+    grid = grid.localCheckpoint(eager=True)
     cells = _mapped_cells(spark, hdrs, grid, contract["schema"])
     records = _validated_records(cells, contract.get("rules", {}))
 

@@ -8,7 +8,7 @@ Cluster usage:
       -m pdf_ocr_spark.plans.job -- \\
       --input  <parquet dir or Iceberg table> \\
       --output <output dir / table> \\
-      --buckets 4096 --chunk-buckets 256 --salt-partitions 8192
+      --buckets 4096 --chunk-buckets 256
 
     # or locally:
     python -m pdf_ocr_spark.plans.job --input ... --output ...
@@ -18,7 +18,7 @@ already recorded in the progress ledger (extract/checkpoint.py).  It
 prints one JSON summary: buckets total and skipped, chunks processed,
 and the docs, spans in, spans out and dropped spans observed in the
 chunks this run wrote.  On a cluster, size --buckets so one bucket ~= a
-few GB of input and --salt-partitions to 2-4x total executor cores.
+few GB of input.
 """
 
 from __future__ import annotations
@@ -35,8 +35,6 @@ def parse_args(argv=None) -> argparse.Namespace:
     p.add_argument("--output", required=True, help="output dir (data + ledger)")
     p.add_argument("--buckets", type=int, default=64)
     p.add_argument("--chunk-buckets", type=int, default=16)
-    p.add_argument("--salt-partitions", type=int, default=None,
-                   help="explicit salted repartition width (2-4x cores)")
     p.add_argument("--big-doc-threshold", type=int, default=None)
     p.add_argument("--cpus", default=None, help="local[N] override")
     p.add_argument("--iceberg", action="store_true",
@@ -66,7 +64,6 @@ def main(argv=None) -> dict:
         n_buckets=args.buckets,
         chunk_buckets=args.chunk_buckets,
         big_doc_threshold=args.big_doc_threshold or BIG_DOC_THRESHOLD,
-        salt_partitions=args.salt_partitions,
     )
     summary["wall_sec"] = round(time.perf_counter() - t0, 3)
     print(json.dumps(summary))

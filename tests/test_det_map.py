@@ -9,8 +9,8 @@ import pytest
 
 from pdf_ocr_spark.operators.det_map import (
     classify_parts,
-    column_roles,
     map_deterministic,
+    roles_kernel,
     typed_alias_table,
 )
 
@@ -58,32 +58,36 @@ def fixture(spark):
     return headers, cells, aliases
 
 
+def _tagged(rows, kind, *fields):
+    """The ``fields`` tuples of roles_kernel's rows tagged ``kind``."""
+    return {tuple(x[f] for f in fields) for x in rows if x.kind == kind}
+
+
 def test_roles(spark, fixture):
     headers, _cells, aliases = fixture
-    r = column_roles(classify_parts(headers, aliases))
-    shared = {(x.col_idx, x.canonical) for x in r["shared"].collect()}
-    assert shared == {(0, "region")}
-    # crop and source vary across headers -> group dims
-    assert {x.canonical for x in r["group_names"].collect()} == {
-        "crop",
-        "source",
-    }
-    # th.ha. and 2025 each appear twice with one value -> constants;
-    # 2025 is a dimension at all only via the int+float rule (year)
-    assert {(x.canonical, x.value) for x in r["const_dims"].collect()} == {
-        ("unit", "Th.ha."),
-        ("year", "2025"),
-    }
-    assert {x.group_key for x in r["groups"].collect()} == {
+    rows = roles_kernel(classify_parts(headers, aliases)).collect()
+    assert _tagged(rows, "s", "col_idx", "canonical") == {(0, "region")}
+    groups = {gk for (gk,) in _tagged(rows, "g", "group_key")}
+    assert groups == {
         "crop=Spring crops",
         "crop=Spring grain",
         "source=Plan",
         "source=Fact",
     }
-    # the float twin of each both-typed alias is the measure
-    meas = {
-        (x.group_key, x.canonical) for x in r["group_measures"].collect()
+    # crop and source vary across headers -> group dims
+    assert {gk.split("=")[0] for gk in groups} == {"crop", "source"}
+    # th.ha. and 2025 each appear twice with one value -> constants;
+    # 2025 is a dimension at all only via the int+float rule (year).
+    # Each group's dimension values are the constants plus its own
+    # group dimension.
+    dims = _tagged(rows, "d", "group_key", "canonical", "value")
+    assert dims == {
+        (gk, c, v)
+        for gk in groups
+        for c, v in [("unit", "Th.ha."), ("year", "2025"), tuple(gk.split("="))]
     }
+    # the float twin of each both-typed alias is the measure
+    meas = _tagged(rows, "m", "group_key", "canonical")
     assert meas == {
         ("crop=Spring crops", "area"),
         ("crop=Spring grain", "area"),
@@ -273,9 +277,7 @@ def _gen_layout(seed):
 
 def test_matches_sequential_reference_semantics(spark):
     """Spark operator == sequential reference implementation over 6
-    seeded randomized layouts (2 docs each, distinct layouts) — BOTH
-    role paths (per-doc roles kernel and pure-relational) pinned to the
-    same oracle."""
+    seeded randomized layouts (2 docs each, distinct layouts)."""
     record_cols_of = lambda schema: sorted(schema)
     for seed in range(6):
         schema, headers_by_doc, cells = _gen_layout(seed)
@@ -293,21 +295,16 @@ def test_matches_sequential_reference_semantics(spark):
         cdf = spark.createDataFrame(
             cell_rows, "doc_id string, row_id int, col_idx int, cell string"
         )
-        # alternate the default kernel path and the relational path
-        # across seeds (each full check is ~10s of Spark jobs); seed 0
-        # runs both so at least one layout pins path equivalence
-        for rk in ((True, False) if seed == 0 else (seed % 2 == 0,)):
-            out = map_deterministic(
-                cdf, headers, typed_alias_table(spark, schema), record_cols,
-                role_kernel=rk,
+        out = map_deterministic(
+            cdf, headers, typed_alias_table(spark, schema), record_cols
+        )
+        got = {
+            (x["doc_id"], x["row_id"], x["group_key"]): tuple(
+                x[c] for c in record_cols
             )
-            got = {
-                (x["doc_id"], x["row_id"], x["group_key"]): tuple(
-                    x[c] for c in record_cols
-                )
-                for x in out.collect()
-            }
-            assert got == expected, f"seed {seed} role_kernel={rk} diverged"
+            for x in out.collect()
+        }
+        assert got == expected, f"seed {seed} diverged"
 
 
 def test_shared_only_doc_emits_implicit_group(spark):
@@ -403,12 +400,10 @@ def test_blank_header_inference(spark):
     assert recs[("d2", 0)].region is None
 
 
-def test_reclassify_label_columns(spark):
+def test_reclassify_promotes_label_columns(spark):
     """Re-classify branch (interpret.py:1504-1526): 'Th.ha. / Region'
     promotes Region to a shared cell column and Th.ha. to a constant;
     a column whose dims are all already covered is skipped."""
-    from pdf_ocr_spark.operators.det_map import reclassify_label_columns
-
     schema = {
         "crop": ("string", []),
         "unit": ("string", ["th.ha."]),
@@ -427,17 +422,20 @@ def test_reclassify_label_columns(spark):
     )
     al = typed_alias_table(spark, schema)
     cls = classify_parts(headers, al)
-    r = column_roles(cls)
-    out = reclassify_label_columns(
-        cls, r["shared"], r["group_names"], r["const_dims"]
-    ).collect()
-    got = {(x.kind, x.col_idx, x.canonical, x.value) for x in out}
+    plain = roles_kernel(cls).collect()
+    promoted = roles_kernel(cls, reclassify=True).collect()
+    assert _tagged(plain, "s", "col_idx", "canonical") == {(0, "crop")}
     # phase 3 already made unit a constant (2 entries, 1 value), so the
     # const parts of both columns are covered; the LAST dim of each
     # promotes to shared
-    assert got == {
-        ("s", 1, "region", None),
-        ("s", 2, "moa", None),
+    assert _tagged(promoted, "s", "col_idx", "canonical") == {
+        (0, "crop"),
+        (1, "region"),
+        (2, "moa"),
+    }
+    # no new constant: the implicit group carries phase 3's one constant
+    assert _tagged(promoted, "d", "group_key", "canonical", "value") == {
+        ("", "unit", "Th.ha.")
     }
 
 
@@ -448,8 +446,6 @@ def test_reclassify_skips_fully_covered_columns(spark):
     also proves the reference's left-to-right constant accumulation
     (interpret.py:1504-1526) can never change the outcome: promotions
     only add canonicals that phase 3 would already have covered."""
-    from pdf_ocr_spark.operators.det_map import reclassify_label_columns
-
     schema = {"u1": ("string", ["alpha"]), "u2": ("string", ["beta"])}
     headers = spark.createDataFrame(
         [
@@ -460,11 +456,9 @@ def test_reclassify_skips_fully_covered_columns(spark):
     )
     al = typed_alias_table(spark, schema)
     cls = classify_parts(headers, al)
-    r = column_roles(cls)
-    out = reclassify_label_columns(
-        cls, r["shared"], r["group_names"], r["const_dims"]
-    ).collect()
-    assert out == []
+    promoted = roles_kernel(cls, reclassify=True).collect()
+    assert _tagged(promoted, "s", "col_idx", "canonical") == set()
+    assert set(promoted) == set(roles_kernel(cls).collect())
 
 
 def test_reclassify_end_to_end(spark):

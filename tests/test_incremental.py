@@ -224,3 +224,47 @@ def test_corrupt_manifest_raises_and_releases_the_cache(spark, tmp_path):
             n_buckets=4,
         )
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_refresh_killed_before_its_manifest_runs_the_next_refresh_cold(
+    spark, tmp_path, monkeypatch
+):
+    """A refresh into a reused out_dir, killed after its data write and
+    before its manifest write, must not leave the older snapshot's
+    manifest beside the new data: a refresh from that directory would
+    then carry a deleted doc back. It finds no manifest and runs cold."""
+    from pyspark.sql import DataFrameWriter
+
+    from pdf_ocr_spark.extract.checkpoint import read_output
+    from pdf_ocr_spark.extract.incremental import run_incremental
+    from pdf_ocr_spark.sources.synthetic import write_corpus_table
+
+    src = str(tmp_path / "corpus")
+    write_corpus_table(spark, src, n_docs=25, skew_docs=0)
+    v2 = spark.read.parquet(src)
+    added = sorted(r["doc_id"] for r in v2.select("doc_id").collect())[-1]
+    v1 = v2.filter(F.col("doc_id") != added)
+    a, b, c = (str(tmp_path / d) for d in "abc")
+
+    run_incremental(spark, v1, a, n_buckets=4)
+    run_incremental(spark, v2, b, prev_dir=a, n_buckets=4)
+
+    parquet = DataFrameWriter.parquet
+
+    def killed_at_manifest(self, path, *args, **kwargs):
+        if path.endswith("/_manifest"):
+            raise RuntimeError("killed before the manifest write")
+        return parquet(self, path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", killed_at_manifest)
+        with pytest.raises(RuntimeError, match="killed before the manifest"):
+            run_incremental(spark, v2, a, prev_dir=b, n_buckets=4)
+
+    summary = run_incremental(spark, v1, c, prev_dir=a, n_buckets=4)
+    got = [r["doc_id"] for r in read_output(spark, c).select("doc_id").collect()]
+    assert len(got) == 24
+    assert added not in got
+    assert summary == {
+        "n_total": 24, "n_reextracted": 24, "n_carried": 0, "n_deleted": 0,
+    }

@@ -12,7 +12,7 @@ from pdf_ocr_spark.plans.package import build_pyfiles_zip
 def test_parse_args_defaults():
     a = parse_args(["--input", "/in", "--output", "/out"])
     assert a.buckets == 64 and a.chunk_buckets == 16
-    assert a.salt_partitions is None and a.iceberg is False
+    assert a.big_doc_threshold is None and a.iceberg is False
 
 
 def test_pyfiles_zip_contains_package(tmp_path):
@@ -43,7 +43,7 @@ def test_job_end_to_end_and_resume(spark, tmp_path):
     with pytest.raises(RuntimeError, match="simulated kill"):
         run_resumable(
             spark, inp, out, n_buckets=8, chunk_buckets=2,
-            salt_partitions=8, fail_after_chunks=2,
+            fail_after_chunks=2,
         )
     done_before = completed_buckets(spark, out)
     assert 0 < len(done_before) < 8
@@ -51,9 +51,7 @@ def test_job_end_to_end_and_resume(spark, tmp_path):
         r.docs for r in spark.read.parquet(f"{out}/_progress").collect()
     )
 
-    summary = run_resumable(
-        spark, inp, out, n_buckets=8, chunk_buckets=2, salt_partitions=8
-    )
+    summary = run_resumable(spark, inp, out, n_buckets=8, chunk_buckets=2)
     assert summary["buckets_skipped"] == len(done_before)
     assert read_output(spark, out).count() == 41
     # the killed run's ledger and the resumed run's summary count every

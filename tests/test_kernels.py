@@ -5,7 +5,7 @@ tests/test_normalize.py, tests/test_serialize_coerce.py)."""
 from __future__ import annotations
 
 from pdf_ocr_spark.kernels.htmlk import expand_grid, extract_html
-from pdf_ocr_spark.kernels.mixed import extract_mixed, extract_mixed_text
+from pdf_ocr_spark.kernels.mixed import extract_mixed
 from pdf_ocr_spark.kernels.normalize import (
     coerce_value,
     detect_cell_type,
@@ -455,24 +455,6 @@ def test_mixed_validation_and_coercion():
 def test_mixed_missing_required_field():
     out, m = extract_mixed([("text", "no fields here", "", 0)])
     assert m["drop_reasons"].get("missing_required_field") == 1
-
-
-def test_mixed_text_routing_equivalence():
-    """Routing media around the text kernel + offset merge == full kernel."""
-    spans = [
-        ("text", "title: x", "", 0),
-        ("media", "", "img://1", 1),
-        ("text", "grade: ZZ", "", 2),
-        ("text", "amount: 1,234", "", 3),
-        ("media", "", "img://2", 4),
-    ]
-    full, _ = extract_mixed(spans)
-    text_only = [s for s in spans if s[0] != "media"]
-    media = [("media", "", s[2], s[3]) for s in spans if s[0] == "media"]
-    routed, _ = extract_mixed_text(text_only)
-    merged = sorted(routed + media, key=lambda s: s[3])
-    merged = [(k, t, r, i) for i, (k, t, r, _o) in enumerate(merged)]
-    assert merged == full
 
 
 # ---------------------------------------------------------------- boxish

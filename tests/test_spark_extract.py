@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from pdf_ocr_spark.corpus import doc_ids
-from pdf_ocr_spark.extract.pipeline import extract, extract_routed_media
+from pdf_ocr_spark.extract.pipeline import extract
 from pdf_ocr_spark.oracle import oracle
 from pdf_ocr_spark.sources.synthetic import synthetic_corpus
 
@@ -51,46 +51,28 @@ def test_skew_path_equals_whole_doc_path(spark):
 
 
 @pytest.mark.spark
-def test_page_stream_equals_grouped_path(spark):
-    """The flat-row streaming page grouping (page_stream=True) must be
-    byte-identical to the groupBy(collect_list) shape, including metrics
-    (both feed the same fused reassembly)."""
-    df = synthetic_corpus(spark, 6, skew_docs=3)
-    a = extract(
-        df, big_doc_threshold=10, page_stream=True, doc_stream=False
-    ).collect()
-    b = extract(
-        df, big_doc_threshold=10, page_stream=False, doc_stream=False
-    ).collect()
-    assert {r.doc_id: r for r in a} == {r.doc_id: r for r in b}
-
-
-@pytest.mark.spark
 def test_doc_stream_equals_whole_doc_path(spark):
-    """The doc-grain streaming shape (doc_stream=True, the default) —
-    one flat shuffle, sorted-run page kernels, in-stream reassembly —
-    must be byte-identical to the whole-doc path, including metrics."""
+    """The mega branch — one flat shuffle, sorted doc runs, the kernel
+    per run — must be byte-identical to the whole-doc path, including
+    metrics."""
     df = synthetic_corpus(spark, 6, skew_docs=3)
-    a = extract(df, big_doc_threshold=10, doc_stream=True).collect()
+    a = extract(df, big_doc_threshold=10).collect()
     b = extract(df, big_doc_threshold=10**9).collect()
     assert {r.doc_id: r for r in a} == {r.doc_id: r for r in b}
 
 
 @pytest.mark.spark
-def test_media_routed_path_equals_kernel(spark):
-    """Columnar media routing (filter/array_sort/transform) == full kernel."""
-    ids = [d for d in doc_ids(90) if d.startswith("mixed-")]
-    df = synthetic_corpus(spark, 90).filter("doc_id like 'mixed-%'")
-    routed = extract_routed_media(df)
-    _assert_golden(routed.collect(), ids)
+def test_styled_docs_equal_oracle(spark):
+    """styled- docs dispatch through the same kernel table in the
+    pipeline and in the oracle."""
+    from pdf_ocr_spark.corpus import generate_doc
+    from pdf_ocr_spark.extract.schema import INPUT_SCHEMA, span_dicts
 
-
-@pytest.mark.spark
-def test_salted_repartition_preserves_golden(spark):
-    ids = doc_ids(30)
-    df = synthetic_corpus(spark, 30, partitions=2)
-    out = extract(df, salt_partitions=16)
-    _assert_golden(out.collect(), ids)
+    ids = [f"styled-{i:06d}" for i in range(4)]
+    df = spark.createDataFrame(
+        [(d, span_dicts(generate_doc(d))) for d in ids], INPUT_SCHEMA
+    )
+    _assert_golden(extract(df).collect(), ids)
 
 
 @pytest.mark.spark
@@ -206,3 +188,57 @@ def test_dirty_rows_equal_on_both_branches(spark, tmp_path):
     assert dict(m["pdfish-990001"].drop_reasons) == {"invalid_span": 2}
     assert m["pdfish-990002"].spans_in == 4
     assert dict(m["pdfish-990002"].drop_reasons)["invalid_span"] == 1
+
+
+@pytest.mark.spark
+def test_dirty_docs_straddling_arrow_batches(spark, tmp_path):
+    """Multi-page pdfish docs with NULL kind, offset, text and media_ref
+    spans, cut into Arrow batches of 7 records: documents and single
+    pages straddle batch boundaries in the mega branch's sorted stream,
+    and both branches still give identical rows and metrics."""
+    from pyspark.sql import functions as F
+
+    from pdf_ocr_spark.corpus import generate_doc
+
+    rows, n_invalid = [], {}
+    for i in range(0, 60, 6):
+        doc_id = f"pdfish-{i:06d}"
+        spans = []
+        for j, (k, t, r, o) in enumerate(generate_doc(doc_id)):
+            spans.append({
+                "kind": None if j % 11 == 3 else k,
+                "text": None if j % 7 == 2 else t,
+                "media_ref": None if j % 5 == 1 else r,
+                "offset": None if j % 13 == 5 else o,
+            })
+        rows.append({"doc_id": doc_id, "spans": spans})
+        n_invalid[doc_id] = sum(
+            s["kind"] is None or s["offset"] is None for s in spans
+        )
+    nullable = (
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>"
+    )
+    path = str(tmp_path / "dirty_pages")
+    (
+        spark.createDataFrame(rows, nullable)
+        .withColumn("n_spans", F.size("spans"))
+        .write.parquet(path)
+    )
+    inp = spark.read.parquet(path)
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        small = sorted(extract(inp).collect(), key=lambda r: r.doc_id)
+        big = sorted(
+            extract(inp, big_doc_threshold=1).collect(), key=lambda r: r.doc_id
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert len(small) == len(rows)
+    assert big == small
+    for r in small:
+        assert dict(r.metrics.drop_reasons)["invalid_span"] == n_invalid[r.doc_id]
+        assert r.metrics.spans_in == len(generate_doc(r.doc_id))

@@ -63,20 +63,12 @@ def worker(cpus: int, corpus_dir: str) -> None:
     # more code paths compile concurrently, more workers spawn) must not
     # contaminate the throughput ratio.  Run the identical job three
     # times; the first run is the warm-up, report the fastest.
-    #
-    # The explicit salted repartition (the pipeline's skew knob, sized
-    # 4x cores like on a real cluster) is required here: the test corpus
-    # is a handful of scan splits, which would otherwise cap parallelism
-    # below even N cores.
+    # Task parallelism is the scan's split count (maxPartitionBytes).
     # warm-up job (JIT + Python worker pool), then ONE measured run;
     # the interleaved A/B schedule in main() provides the repetitions
-    extract(inp.limit(8000), salt_partitions=64).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    extract(inp.limit(8000)).write.format("noop").mode("overwrite").save()
     t0 = time.perf_counter()
-    extract(inp, salt_partitions=64).write.mode("overwrite").parquet(
-        out_dir
-    )
+    extract(inp).write.mode("overwrite").parquet(out_dir)
     wall = time.perf_counter() - t0
     print(json.dumps({"cpus": cpus, "docs": n, "wall_sec": round(wall, 3),
                       "docs_per_sec": round(n / wall, 2)}))

@@ -84,13 +84,11 @@ def worker(cpus: int, corpus_dir: str) -> None:
 
     # untimed seed (doubles as the steady-state warm-up: full
     # extraction of V1 JITs the kernels and spawns the worker pool)
-    run_incremental(spark, v1, out1, n_buckets=64, salt_partitions=64)
+    run_incremental(spark, v1, out1, n_buckets=64)
     n2 = v2.count()
 
     t0 = time.perf_counter()
-    m = run_incremental(
-        spark, v2, out2, prev_dir=out1, n_buckets=64, salt_partitions=64
-    )
+    m = run_incremental(spark, v2, out2, prev_dir=out1, n_buckets=64)
     c = compact_output(spark, out2, files_per_bucket=1)
     wall = time.perf_counter() - t0
     print(
