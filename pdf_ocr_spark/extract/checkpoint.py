@@ -1,42 +1,46 @@
-"""Resumable extraction runner: bucketed chunks + a per-chunk ledger.
+"""The snapshot both writers commit, and the resumable extraction runner.
 
 north_rule: "checkpoints per-partition progress with lineage + extraction
 metrics (spans/doc, drop reasons) so a killed run resumes without
 reprocessing". The reference has no resume at all (SURVEY.md §2.10); this
 is new job design, not a port.
 
-Mechanism:
-  - work is hash-bucketed by ``pmod(xxhash64(doc_id), n_buckets)``;
-  - buckets are processed in chunks; each chunk's output is written to
-    ``<out>/data/`` partitioned by ``bucket`` with DYNAMIC partition
-    overwrite (idempotent — a replayed bucket replaces, never duplicates);
-  - a chunk runs in as many tasks as its share of the input would get in
-    one unchunked pass (``chunk_partitions``), so chunking adds no Python
-    tasks, each of which has a fixed start-up cost;
-  - the write observes its own rows (``DataFrame.observe``: docs and the
-    sums of spans in/out and dropped), and after the data commit one
-    ledger row per chunk is appended to ``<out>/_progress/``: the chunk's
-    buckets, run_id, commit time and those observed totals. Nothing
-    re-reads the output;
-  - resume = read ledger → anti-set of completed buckets → process only
-    the remainder. A bucket is completed iff a ledger row lists it, and
-    ledger rows are written only after the data commit, so a kill between
-    data-write and ledger-append merely re-extracts one chunk
-    idempotently.
+A snapshot is ``<out>/data/bucket=N/`` rows ``(doc_id, spans, metrics,
+fp)`` — ``fp`` is the input fingerprint (``with_fp``), carried through
+``extract`` — plus the ledger ``<out>/_progress/``: one row per
+``commit``, appended after its data write, with the commit's buckets,
+``n_buckets``, run_id, time, kernel version and the observed totals of
+the rows it wrote (``DataFrame.observe``; nothing re-reads the output).
+It is complete when its ledger rows cover ``range(n_buckets)``.
+
+``run_resumable`` hash-buckets the work by ``pmod(xxhash64(doc_id),
+n_buckets)`` and commits it in chunks of buckets. A chunk's write is a
+dynamic partition overwrite (a replayed bucket replaces, never
+duplicates) in as many tasks as its share of the input would get in one
+unchunked pass (``chunk_partitions``), so chunking adds no Python tasks,
+each of which has a fixed start-up cost. A rerun processes only the
+buckets no ledger row lists; a kill between a chunk's data write and its
+ledger row merely re-extracts that chunk.
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import inspect
 import math
+import sys
 import time
 import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from .. import kernels
 from .pipeline import BIG_DOC_THRESHOLD, extract
 
 LEDGER_SCHEMA = (
-    "chunk int, buckets array<int>, run_id string, committed_at double, "
+    "chunk int, buckets array<int>, n_buckets int, run_id string, "
+    "committed_at double, version string, "
     "docs long, spans_in long, spans_out long, dropped long"
 )
 TOTALS = ("docs", "spans_in", "spans_out", "dropped")
@@ -48,30 +52,84 @@ def _bucketed(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def path_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe through the Hadoop FileSystem of the session's
+def with_fp(df: DataFrame) -> DataFrame:
+    """``df`` plus the input fingerprint ``fp``: ``xxhash64`` over the
+    JSON form of the spans. ``to_json`` names each non-NULL field, so
+    spans that differ only in which field is NULL hash apart; the struct
+    hash ``xxhash64(spans)`` skips NULL fields and would not."""
+    return df.withColumn("fp", F.xxhash64(F.to_json("spans")))
+
+
+@functools.cache
+def kernel_version() -> str:
+    """Digest of the kernels package's sources (``KERNELS`` loads all of
+    its modules; ``inspect.getsource`` also reads the ``--py-files`` zip)."""
+    mods = [m for n, m in sorted(sys.modules.items()) if n.startswith(kernels.__name__)]
+    src = "".join(map(inspect.getsource, mods))
+    return hashlib.sha256(src.encode()).hexdigest()[:16]
+
+
+def _fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) of ``path`` under the session's Hadoop
     configuration — the same path resolution the parquet reader uses."""
     p = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    fs, p = _fs(spark, path)
+    return fs.exists(p)
 
 
 def delete_path(spark: SparkSession, path: str) -> None:
-    """Recursive delete through the same Hadoop FileSystem as
-    ``path_exists``; a missing path is not an error."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
+    """Recursive delete; a missing path is not an error."""
+    fs, p = _fs(spark, path)
+    fs.delete(p, True)
 
 
-def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
-    """Buckets listed by a ledger row. No ledger means a fresh run; a
-    ledger that exists but cannot be read raises. The schema is given, so
-    a ledger holding only a killed first append's ``_temporary`` reads as
-    empty instead of failing schema inference."""
+def read_ledger(spark: SparkSession, out_dir: str) -> list:
+    """The ledger rows of ``out_dir``: none without a ledger; an
+    unreadable one raises. With the schema given, a killed first
+    append's ``_temporary`` reads as empty and an older ledger's missing
+    columns read as NULL."""
     path = f"{out_dir}/_progress"
     if not path_exists(spark, path):
-        return set()
-    ledger = spark.read.schema(LEDGER_SCHEMA).parquet(path)
-    return {b for r in ledger.select("buckets").collect() for b in r.buckets}
+        return []
+    return spark.read.schema(LEDGER_SCHEMA).parquet(path).collect()
+
+
+def is_complete(ledger: list) -> bool:
+    """Whether the ledger rows cover every bucket of their snapshot."""
+    covered = {b for r in ledger for b in r.buckets}
+    return bool(ledger) and covered == set(range(ledger[0].n_buckets or 0))
+
+
+def commit(spark: SparkSession, out: DataFrame, out_dir: str, buckets: list[int],
+           n_buckets: int, run_id: str, chunk: int = 0) -> dict:
+    """Write the bucketed rows ``out`` of ``buckets`` into ``<out_dir>/data``,
+    replacing those buckets, then append their ledger row. Returns the
+    observed totals of the written rows."""
+    obs = Observation()
+    out = out.observe(
+        obs,
+        F.count(F.lit(1)).alias("docs"),
+        F.sum("metrics.spans_in").alias("spans_in"),
+        F.sum("metrics.spans_out").alias("spans_out"),
+        F.sum("metrics.dropped").alias("dropped"),
+    )
+    (
+        out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(f"{out_dir}/data")
+    )
+    seen = {k: int(obs.get[k] or 0) for k in TOTALS}  # a sum over no rows is NULL
+    row = (chunk, buckets, n_buckets, run_id, time.time(), kernel_version(),
+           *seen.values())
+    spark.createDataFrame([row], LEDGER_SCHEMA).write.mode("append").parquet(
+        f"{out_dir}/_progress"
+    )
+    return seen
 
 
 def chunk_partitions(
@@ -109,12 +167,16 @@ def run_resumable(
 ) -> dict:
     """Run (or resume) the extraction job. Returns summary stats,
     including the observed ``docs``, ``spans_in``, ``spans_out`` and
-    ``dropped`` totals of the chunks this call processed.
+    ``dropped`` totals of the chunks this call processed. A ledger of
+    another ``n_buckets`` raises.
 
     ``fail_after_chunks`` is a test hook simulating a killed run."""
     run_id = run_id or uuid.uuid4().hex[:12]
-    done = completed_buckets(spark, out_dir)
-    work = _bucketed(input_df, n_buckets)
+    ledger = read_ledger(spark, out_dir)
+    if any(r.n_buckets != n_buckets for r in ledger):
+        raise ValueError(f"{out_dir}: its ledger has n_buckets other than {n_buckets}")
+    done = {b for r in ledger for b in r.buckets}
+    work = _bucketed(with_fp(input_df), n_buckets)
     pending = [b for b in range(n_buckets) if b not in done]
     chunks = [
         pending[i : i + chunk_buckets] for i in range(0, len(pending), chunk_buckets)
@@ -126,27 +188,7 @@ def run_resumable(
     for ci, chunk in enumerate(chunks):
         chunk_df = chunk_input(work, chunk, n_buckets, n_in)
         out = _bucketed(extract(chunk_df, big_doc_threshold), n_buckets)
-        obs = Observation()
-        out = out.observe(
-            obs,
-            F.count(F.lit(1)).alias("docs"),
-            F.sum("metrics.spans_in").alias("spans_in"),
-            F.sum("metrics.spans_out").alias("spans_out"),
-            F.sum("metrics.dropped").alias("dropped"),
-        )
-        # idempotent commit: dynamic partition overwrite replaces exactly
-        # the buckets in this chunk
-        (
-            out.write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(f"{out_dir}/data")
-        )
-        # ledger: the chunk's observed totals, appended post-commit (a
-        # sum over no rows is NULL)
-        seen = {k: int(obs.get[k] or 0) for k in TOTALS}
-        spark.createDataFrame(
-            [(ci, chunk, run_id, time.time(), *seen.values())], LEDGER_SCHEMA
-        ).write.mode("append").parquet(f"{out_dir}/_progress")
+        seen = commit(spark, out, out_dir, chunk, n_buckets, run_id, ci)
         for k in TOTALS:
             totals[k] += seen[k]
         processed += 1
@@ -162,4 +204,8 @@ def run_resumable(
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The rows ``(doc_id, spans, metrics, fp)`` of ``out_dir``'s
+    snapshot; an incomplete one (a killed run or refresh) raises."""
+    if not is_complete(read_ledger(spark, out_dir)):
+        raise ValueError(f"{out_dir} holds no complete snapshot")
     return spark.read.parquet(f"{out_dir}/data").drop("bucket")

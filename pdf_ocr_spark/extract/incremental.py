@@ -6,50 +6,50 @@ north_rule extension (same family as checkpoint.py's resume): at 10^12
 documents a corpus refresh touches a tiny fraction of rows, and
 re-running the full extraction is not an option.  The incremental job
 
-  1. fingerprints each document's INPUT spans (sha256 over the
-     canonical JSON of the spans array — a scan-local expression);
-  2. diffs the fingerprints against the manifest the previous run
-     stored alongside its output (one full-outer-ish join on
-     doc_id);
+  1. fingerprints each document's INPUT spans (``checkpoint.with_fp``,
+     a scan-local expression);
+  2. diffs them against the ``fp`` column of the previous snapshot's
+     rows (a column-pruned read of its ``data/``);
   3. routes ONLY added/changed documents through ``extract``; deleted
      documents drop; every unchanged document's output row is carried
-     forward by a semi join of the previous output (no kernel work,
-     no span recompute);
-  4. writes the merged output + refreshed manifest in the same
-     ``<out>/data`` layout ``checkpoint.read_output`` reads, so
-     incremental runs compose with each other and with resume. The
-     manifest is deleted before and written after the data, so only a
-     completed refresh leaves one.
+     forward (no kernel work, no span recompute);
+  4. deletes ``<out>/data`` and ``<out>/_progress``, then commits the
+     merged rows as one ``checkpoint.commit`` over every bucket — the
+     snapshot ``run_resumable`` writes.  A refresh killed before its
+     ledger row leaves an incomplete snapshot, which ``read_output``
+     refuses; a killed refresh reruns from scratch.
 
-Scale shape: two scans (new corpus, previous output), one equi-join
-grain per step, extraction cost proportional to |changed| — never to
-|corpus|.  The manifest is (doc_id, fp): 2 thin columns at corpus
-grain.
+A previous snapshot that is incomplete, has no ``fp`` or was written by
+other kernel sources (``checkpoint.kernel_version``) seeds nothing: the
+refresh re-extracts every document.  Extraction cost is proportional to
+|changed| — never to |corpus|.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import uuid
 
-from .checkpoint import _bucketed, delete_path, path_exists, read_output
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+
+from . import checkpoint as ck
 from .pipeline import BIG_DOC_THRESHOLD, extract
 
 
 def input_fingerprint(df: DataFrame) -> DataFrame:
-    """(doc_id, spans, ...) -> (doc_id, fp): sha256 over the canonical
-    JSON form of the input spans (field order is pinned by the schema,
-    so the serialization — and the fingerprint — is deterministic)."""
-    return df.select(
-        "doc_id", F.sha2(F.to_json(F.col("spans")), 256).alias("fp")
-    )
+    """(doc_id, spans, ...) -> (doc_id, fp), ``fp`` as the snapshot rows
+    carry it (``checkpoint.with_fp``)."""
+    return ck.with_fp(df).select("doc_id", "fp")
 
 
-def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The (doc_id, fp) manifest ``out_dir``'s run stored, or None when
-    it has none. A manifest that exists but cannot be read raises: a
-    half-written one must not pass for an empty previous snapshot."""
-    path = f"{out_dir}/_manifest"
-    return spark.read.parquet(path) if path_exists(spark, path) else None
+def _previous_rows(spark: SparkSession, prev_dir: str | None) -> DataFrame | None:
+    """The rows of ``prev_dir``'s snapshot when a refresh may carry them
+    forward (see the module docstring), else None."""
+    ledger = ck.read_ledger(spark, prev_dir) if prev_dir else []
+    current = {r.version for r in ledger} == {ck.kernel_version()}
+    if not (ck.is_complete(ledger) and current):
+        return None
+    rows = spark.read.parquet(f"{prev_dir}/data").drop("bucket")
+    return rows if "fp" in rows.columns else None
 
 
 def run_incremental(
@@ -64,21 +64,20 @@ def run_incremental(
     """Extract ``input_df`` into ``out_dir``, reusing ``prev_dir``'s
     output for documents whose input fingerprint is unchanged.
 
-    With ``prev_dir=None`` (or a missing manifest) every document is
-    treated as changed — the cold-start run that seeds the manifest.
-    Returns {n_total, n_carried, n_reextracted, n_deleted}.
+    With no snapshot to reuse (``_previous_rows``) every document is
+    treated as changed — the cold-start run. Returns {n_total,
+    n_carried, n_reextracted, n_deleted}, observed on the write.
 
     PRECONDITION: ``input_df`` must be doc_id-unique (one row per
     document — the corpus-snapshot grain every entry point in this
     package shares; resume makes the same assumption).  Duplicate
-    doc_ids would fan out the semi joins and write duplicate
-    manifest/output rows, silently corrupting n_carried/n_deleted on
-    the NEXT run.  Because this is the entry point fed raw CDC
-    batches, pass ``check_unique=True`` to fail fast instead: one
-    extra count over the thin (doc_id) projection — cheap at test
-    scale, a deliberate opt-in full scan at corpus scale (dedup the
-    CDC batch upstream with a groupBy-latest instead of paying it
-    per refresh)."""
+    doc_ids would fan out the joins and write duplicate output rows,
+    silently corrupting n_carried/n_deleted on the NEXT run.  Because
+    this is the entry point fed raw CDC batches, pass
+    ``check_unique=True`` to fail fast instead: one extra count over the
+    thin (doc_id) projection — cheap at test scale, a deliberate opt-in
+    full scan at corpus scale (dedup the CDC batch upstream with a
+    groupBy-latest instead of paying it per refresh)."""
     import os
 
     if prev_dir is not None and os.path.realpath(
@@ -104,117 +103,73 @@ def run_incremental(
                 f"(e.g. doc_id={dup[0]['doc_id']} appears "
                 f"{dup[0]['count']}x) — dedup the CDC batch first"
             )
-    # The fingerprint relation is referenced by every downstream leg
-    # (changed/unchanged diff, the deleted anti join, the merged
-    # write's semi join, the manifest write) — persist the THIN
-    # (doc_id, fp) rows so the corpus-grain sha256-over-spans scan
-    # runs ONCE, not once per action (measured 4x fingerprint cost on
-    # the N->4N study before this; at 10^12 docs the cached relation
-    # is 2 slim columns, and spills to disk
-    # under MEMORY_AND_DISK if it must).
-    fp_new = input_fingerprint(input_df).persist()
+    prev = _previous_rows(spark, prev_dir)
+    # The fingerprint relation is referenced by both diff legs (changed
+    # and deleted) — persist the THIN (doc_id, fp) rows so the
+    # corpus-grain fingerprint scan runs ONCE.
+    fp_new = input_fingerprint(input_df).persist() if prev is not None else None
+    acct = Observation()
     try:
-        prev_m = read_manifest(spark, prev_dir) if prev_dir else None
-
-        if prev_m is None:
-            changed_ids = fp_new.select("doc_id")
-            carried = None
-            n_deleted = 0
-            n_unchanged = 0
+        if prev is None:
+            merged = extract(ck.with_fp(input_df), big_doc_threshold)
         else:
-            prev_m = prev_m.select(
+            prev_fp = prev.select(
                 F.col("doc_id").alias("p_doc_id"), F.col("fp").alias("p_fp")
             )
-            diff = fp_new.join(
-                prev_m, fp_new.doc_id == prev_m.p_doc_id, "left"
+            changed_fp = (
+                fp_new.join(prev_fp, fp_new.doc_id == prev_fp.p_doc_id, "left")
+                .filter(F.col("p_fp").isNull() | (F.col("fp") != F.col("p_fp")))
+                .select("doc_id", "fp")
             )
-            changed_ids = diff.filter(
-                F.col("p_fp").isNull() | (F.col("fp") != F.col("p_fp"))
-            ).select("doc_id")
-            deleted_ids = prev_m.join(
-                fp_new, prev_m.p_doc_id == fp_new.doc_id, "anti"
+            deleted_ids = prev_fp.join(
+                fp_new, prev_fp.p_doc_id == fp_new.doc_id, "anti"
             ).select(F.col("p_doc_id").alias("doc_id"))
             # Carried rows = previous output MINUS the Δ-grain exclude set
-            # (changed ∪ deleted), as an ANTI join — not a semi join
-            # against the corpus-grain unchanged set.  The exclude side is
-            # |Δ| rows (the 0.1%-refresh case at production), so AQE
-            # converts the join to a broadcast at runtime and the
-            # corpus-grain span rows never shuffle (measured: the semi
-            # variant's carried leg scaled 1.04x N->4N because it moved
-            # the whole previous output through an exchange; the anti leg
-            # is scan + broadcast filter).  When Δ IS corpus-sized (a
-            # full-churn batch) AQE falls back to the shuffle join — the
-            # same plan the semi had, so this is never worse.
-            carried = read_output(spark, prev_dir).join(
-                changed_ids.unionByName(deleted_ids), "doc_id", "anti"
+            # (changed ∪ deleted) — not a join against the corpus-grain
+            # unchanged set.  The exclude side is |Δ| rows, so AQE
+            # broadcasts it and the corpus-grain span rows never shuffle
+            # (a semi join against the unchanged set measured 1.04x
+            # N->4N: it moved the whole previous output through an
+            # exchange).  The join's ``deleted`` flag lets the write
+            # observe the deleted and carried counts.
+            exclude = changed_fp.select("doc_id", F.lit(False).alias("deleted"))
+            exclude = exclude.unionByName(
+                deleted_ids.select("doc_id", F.lit(True).alias("deleted"))
             )
-            # Accounting in ONE action: a full-outer join of the two THIN
-            # manifests yields deleted (new side null) and unchanged
-            # (fingerprints equal) in a single aggregation — the refresh
-            # job is a sequential chain of Spark actions, and every
-            # collapsed action removes a fixed serial cost that otherwise
-            # caps N->4N scaling (each count was separately re-joining
-            # the manifests).  |unchanged| == |carried| without
-            # re-scanning corpus-grain span rows: a run's output holds
-            # exactly its manifest's docs (the invariant every writer in
-            # this package maintains).
-            acct = (
-                fp_new.join(
-                    prev_m, fp_new.doc_id == prev_m.p_doc_id, "full"
+            carried = (
+                prev.join(exclude, "doc_id", "left")
+                .observe(
+                    acct,
+                    F.count(F.when(F.col("deleted"), 1)).alias("n_deleted"),
+                    F.count(F.when(F.col("deleted").isNull(), 1)).alias("n_carried"),
                 )
-                .agg(
-                    F.sum(
-                        F.when(F.col("doc_id").isNull(), 1).otherwise(0)
-                    ).alias("n_del"),
-                    F.sum(
-                        F.when(F.col("fp") == F.col("p_fp"), 1).otherwise(0)
-                    ).alias("n_unch"),
-                )
-                .collect()[0]
+                .filter(F.col("deleted").isNull())
+                .drop("deleted")
             )
-            n_deleted = int(acct["n_del"] or 0)
-            n_unchanged = int(acct["n_unch"] or 0)
-
-        changed = input_df.join(changed_ids, "doc_id", "semi")
-        new_out = extract(changed, big_doc_threshold)
-        merged = (
-            new_out if carried is None else new_out.unionByName(carried)
-        )
+            changed = input_df.join(changed_fp, "doc_id")
+            merged = extract(changed, big_doc_threshold).unionByName(carried)
         # Hash-distribute on the bucket key before the partitioned write
         # (Iceberg's 'hash' write-distribution mode): without it every
-        # write task emits a file into every bucket directory it touches —
-        # one file per (task, bucket) pair, so the small-file count grows
-        # WITH cluster width (measured 655 files at N vs 1295 at 4N on
-        # the same input) and the next compaction pays to read them all.
-        # The repartition is one exchange of the output at a DATA-sized
-        # grain (n_buckets tasks, identical at any cluster width) and
+        # write task emits a file into every bucket directory it touches,
+        # so the small-file count grows WITH cluster width (measured 655
+        # files at N vs 1295 at 4N on the same input).  The repartition
+        # is one exchange at a DATA-sized grain (n_buckets tasks) and
         # bounds the tree to one file per bucket.
-        out = _bucketed(merged, n_buckets).repartition(n_buckets, "bucket")
-        # A reused out_dir holds an older snapshot's manifest. Drop it
-        # before the data write, so a refresh killed between the two
-        # writes leaves a snapshot with no manifest (the next refresh
-        # from it runs cold) instead of new data beside a stale
-        # manifest (the next refresh would carry deleted docs back).
-        delete_path(spark, f"{out_dir}/_manifest")
-        (
-            out.write.mode("overwrite")
-            # STATIC overwrite, explicitly: this is a full-snapshot write,
-            # and the session default is dynamic partition overwrite (the
-            # resume path's per-chunk replace). Under dynamic mode a
-            # reused out_dir would keep stale files in any bucket the new
-            # snapshot leaves empty — deleted docs would resurface.
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("bucket")
-            .parquet(f"{out_dir}/data")
-        )
-        fp_new.write.mode("overwrite").parquet(f"{out_dir}/_manifest")
-        n_total = spark.read.parquet(f"{out_dir}/data").count()
-        n_carried = n_unchanged
-        return {
-            "n_total": n_total,
-            "n_reextracted": n_total - n_carried,
-            "n_carried": n_carried,
-            "n_deleted": n_deleted,
-        }
+        out = ck._bucketed(merged, n_buckets).repartition(n_buckets, "bucket")
+        # Drop a reused out_dir's older snapshot whole: no stale bucket
+        # survives where the new snapshot has no rows, and until the new
+        # ledger row lands the directory reads as incomplete.
+        ck.delete_path(spark, f"{out_dir}/data")
+        ck.delete_path(spark, f"{out_dir}/_progress")
+        seen = ck.commit(spark, out, out_dir, list(range(n_buckets)), n_buckets,
+                         uuid.uuid4().hex[:12])
     finally:
-        fp_new.unpersist()
+        if fp_new is not None:
+            fp_new.unpersist()
+    got = acct.get if prev is not None else {"n_carried": 0, "n_deleted": 0}
+    return {
+        "n_total": seen["docs"],
+        "n_reextracted": seen["docs"] - got["n_carried"],
+        "n_carried": got["n_carried"],
+        "n_deleted": got["n_deleted"],
+    }

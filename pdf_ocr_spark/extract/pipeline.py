@@ -27,12 +27,12 @@ from __future__ import annotations
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..corpus import corpus_of
 from ..kernels import KERNELS
 from ..kernels.common import new_metrics
-from .schema import OUTPUT_SCHEMA
+from .schema import FP_FIELD, OUTPUT_SCHEMA
 
 BIG_DOC_THRESHOLD = 4000  # spans; FIXTURES.md median doc is ~10^2
 
@@ -103,8 +103,8 @@ def _extract_doc(doc_id: str, spans: list[tuple], dirty: bool) -> tuple[list, di
     return spans_out, m
 
 
-def _output_batch(doc_ids: list[str], results: list[tuple[list, dict]]):
-    """(doc_id, spans, metrics) RecordBatch, rebuilt from primitive
+def _output_batch(doc_ids: list[str], results: list[tuple[list, dict]], fp=None):
+    """(doc_id, spans, metrics[, fp]) RecordBatch, rebuilt from primitive
     arrays with ListArray.from_arrays — no dicts, no type inference."""
     out_k: list = []
     out_t: list = []
@@ -136,20 +136,22 @@ def _output_batch(doc_ids: list[str], results: list[tuple[list, dict]]):
         ],
         names=["kind", "text", "media_ref", "offset"],
     )
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(doc_ids, pa.string()),
-            pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), spans_struct),
-            pa.array(metrics, _METRICS_TYPE),
-        ],
-        names=["doc_id", "spans", "metrics"],
-    )
+    cols = [
+        pa.array(doc_ids, pa.string()),
+        pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), spans_struct),
+        pa.array(metrics, _METRICS_TYPE),
+    ]
+    if fp is not None:
+        cols.append(pa.array(fp, pa.int64()))
+    names = ["doc_id", "spans", "metrics", "fp"]
+    return pa.RecordBatch.from_arrays(cols, names=names[: len(cols)])
 
 
 def _extract_batch_arrow(batches):
-    """Small-doc branch: each row (doc_id, spans) is one whole document.
-    The nested list<struct> column is flattened ONCE into four primitive
-    arrays and sliced per document by the list lengths."""
+    """Small-doc branch: each row (doc_id, spans[, fp]) is one whole
+    document (``fp`` passes through). The nested list<struct> column is
+    flattened ONCE into four primitive arrays and sliced per document by
+    the list lengths."""
     for rb in batches:
         doc_ids = _tolist(pc.fill_null(rb.column(0), ""))
         la = rb.column(1)
@@ -162,50 +164,58 @@ def _extract_batch_arrow(batches):
         for doc_id, n in zip(doc_ids, lengths):
             results.append(_extract_doc(doc_id, spans[pos : pos + n], dirty))
             pos += n
-        yield _output_batch(doc_ids, results)
+        fp = rb.column(2) if rb.num_columns > 2 else None
+        yield _output_batch(doc_ids, results, fp)
 
 
 def _extract_sorted_docs(batches):
     """Mega-doc branch: flat rows (doc_id, page, kind, text, media_ref,
-    offset), hash-partitioned on doc_id and sorted by (doc_id, page,
+    offset[, fp]), hash-partitioned on doc_id and sorted by (doc_id, page,
     offset) within the partition, so every document is one contiguous
     run. A run that reaches the end of an Arrow batch stays open and
     continues in the next one; the document is extracted when its run
-    ends. A document whose spans are all invalid still yields its row."""
+    ends. A document whose spans are all invalid still yields its row,
+    with the ``fp`` of its run's first row."""
     cur_doc: str | None = None
     cur_spans: list[tuple] = []
     cur_dirty = False
+    cur_fp = fps = None
     for rb in batches:
         n = rb.num_rows
         if not n:
             continue
         doc = rb.column(0)
         ids = _tolist(doc)
+        fps = _tolist(rb.column(6)) if rb.num_columns > 6 else None
         spans, dirty = _span_tuples(*(rb.column(i) for i in range(2, 6)))
         change = pc.indices_nonzero(pc.not_equal(doc.slice(1), doc.slice(0, n - 1)))
         starts = [0, *(i + 1 for i in _tolist(change)), n]
         done_ids: list[str] = []
+        done_fps: list[int] = []
         done: list[tuple[list, dict]] = []
         for i, j in zip(starts, starts[1:]):
             if ids[i] != cur_doc:
                 if cur_doc is not None:
                     done_ids.append(cur_doc)
+                    done_fps.append(cur_fp)
                     done.append(_extract_doc(cur_doc, cur_spans, cur_dirty))
                 cur_doc, cur_spans, cur_dirty = ids[i], [], False
+                cur_fp = fps and fps[i]
             cur_spans.extend(spans[i:j])
             cur_dirty = cur_dirty or dirty
         if done:
-            yield _output_batch(done_ids, done)
+            yield _output_batch(done_ids, done, None if fps is None else done_fps)
     if cur_doc is not None:
-        yield _output_batch([cur_doc], [_extract_doc(cur_doc, cur_spans, cur_dirty)])
+        last = _extract_doc(cur_doc, cur_spans, cur_dirty)
+        yield _output_batch([cur_doc], [last], None if fps is None else [cur_fp])
 
 
 # ------------------------------------------------------------- pipeline
 
 
 def extract(df: DataFrame, big_doc_threshold: int = BIG_DOC_THRESHOLD) -> DataFrame:
-    """input (doc_id, spans[, n_spans]) -> output (doc_id, spans, metrics),
-    one output row per input row.
+    """input (doc_id, spans[, n_spans][, fp]) -> output (doc_id, spans,
+    metrics[, fp]), one output row per input row.
 
     Documents with at most ``big_doc_threshold`` spans (and every
     non-pageable document) take the small-doc branch, a pure map. Larger
@@ -218,7 +228,9 @@ def extract(df: DataFrame, big_doc_threshold: int = BIG_DOC_THRESHOLD) -> DataFr
     # reaches the parquet scan as a pushed filter, so row-group min/max
     # stats skip the small-doc groups; a computed size never pushes down.
     has_n = "n_spans" in df.columns
-    df = df.select("doc_id", "spans", *(["n_spans"] if has_n else []))
+    carry = ["fp"] if "fp" in df.columns else []
+    schema = T.StructType(OUTPUT_SCHEMA.fields + ([FP_FIELD] if carry else []))
+    df = df.select("doc_id", "spans", *carry, *(["n_spans"] if has_n else []))
     n = F.col("n_spans") if has_n else F.size("spans")
 
     # The skew split is only valid for packed-offset corpora (pdfish/mega:
@@ -233,16 +245,14 @@ def extract(df: DataFrame, big_doc_threshold: int = BIG_DOC_THRESHOLD) -> DataFr
     pageable = F.coalesce(
         F.substring_index("doc_id", "-", 1).isin("pdfish", "mega"), F.lit(False)
     )
-    small = df.filter(n.isNull() | (n <= big_doc_threshold) | ~pageable).select(
-        "doc_id", "spans"
-    )
-    small_out = small.mapInArrow(_extract_batch_arrow, schema=OUTPUT_SCHEMA)
+    small = df.filter(n.isNull() | (n <= big_doc_threshold) | ~pageable).drop("n_spans")
+    small_out = small.mapInArrow(_extract_batch_arrow, schema=schema)
 
-    big = df.filter((n > big_doc_threshold) & pageable).select("doc_id", "spans")
+    big = df.filter((n > big_doc_threshold) & pageable).drop("n_spans")
     grain = _flat_spans(big).repartition("doc_id").sortWithinPartitions(
         "doc_id", "page", "offset"
     )
-    big_out = grain.mapInArrow(_extract_sorted_docs, schema=OUTPUT_SCHEMA)
+    big_out = grain.mapInArrow(_extract_sorted_docs, schema=schema)
     return small_out.unionByName(big_out)
 
 
@@ -251,8 +261,9 @@ def _flat_spans(big: DataFrame) -> DataFrame:
     text/media_ref coerce to '' (as in the small branch), and a NULL
     offset gets page -1, so its span sorts first in its document and
     ``_extract_doc`` counts it, like a NULL kind, as an 'invalid_span'
-    drop."""
-    return big.select("doc_id", F.explode("spans").alias("s")).select(
+    drop. An ``fp`` column rides on every flat row."""
+    carry = big.columns[2:]
+    return big.select("doc_id", F.explode("spans").alias("s"), *carry).select(
         "doc_id",
         F.coalesce(
             (F.col("s.offset") / F.lit(1_000_000)).cast("long"), F.lit(-1)
@@ -261,4 +272,5 @@ def _flat_spans(big: DataFrame) -> DataFrame:
         F.coalesce(F.col("s.text"), F.lit("")).alias("text"),
         F.coalesce(F.col("s.media_ref"), F.lit("")).alias("media_ref"),
         F.col("s.offset").alias("offset"),
+        *carry,
     )

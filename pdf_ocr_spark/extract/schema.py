@@ -39,6 +39,9 @@ OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
+# the input fingerprint a snapshot's rows carry (checkpoint.with_fp)
+FP_FIELD = T.StructField("fp", T.LongType(), False)
+
 
 def span_dicts(spans: list[tuple]) -> list[dict]:
     return [

@@ -44,19 +44,3 @@ def finalize(out_spans: list, metrics: dict) -> tuple[list, dict]:
         [(k, t, m, i) for i, (k, t, m, _o) in enumerate(out_spans)],
         metrics,
     )
-
-
-def merge_metrics(parts: list[dict]) -> dict:
-    """Combine per-page metrics into one per-document metrics dict.
-
-    Used when a skewed mega-document is exploded to page grain and
-    reassembled (SURVEY.md §4 item 1).
-    """
-    out = new_metrics()
-    for p in parts:
-        out["spans_in"] += p["spans_in"]
-        out["spans_out"] += p["spans_out"]
-        out["dropped"] += p["dropped"]
-        for k, v in p["drop_reasons"].items():
-            out["drop_reasons"][k] = out["drop_reasons"].get(k, 0) + v
-    return out

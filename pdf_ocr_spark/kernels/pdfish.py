@@ -49,7 +49,6 @@ from .common import (
     KIND_TEXT,
     drop,
     finalize,
-    merge_metrics,
     new_metrics,
 )
 from .normalize import normalize_text, ocr_repair
@@ -1203,21 +1202,6 @@ def extract_page(
     return out
 
 
-def extract_pdfish_page_spans(spans: list[tuple]) -> tuple[list, dict]:
-    """Extract from spans known to be on a single page (skew-explode path).
-    Same contract as extract_pdfish but without page grouping."""
-    metrics = new_metrics(len(spans))
-    items = []
-    for kind, text, ref, off in spans:
-        _p, y, x = decode_offset(off)
-        if kind not in ("media", "pdf_line") and not (text or "").strip():
-            drop(metrics, "empty")
-            continue
-        items.append((y, x, kind, text or "", ref or ""))
-    out = extract_page(items, metrics)
-    return finalize([(k, t, m, 0) for k, t, m in out], metrics)
-
-
 def extract_pdfish(spans: list[tuple]) -> tuple[list, dict]:
     """Whole-document extraction: group by page, extract each page in
     order, re-sequence offsets 0..n-1. Returns (out_spans, metrics)."""
@@ -1313,17 +1297,3 @@ def filter_pages_by_titles(
                 break
     out = [s for s in spans if decode_offset(s[3])[0] in kept]
     return sorted(kept), out
-
-
-def reassemble_pages(page_results: list[tuple[int, list, dict]]) -> tuple[list, dict]:
-    """Merge per-page extraction results (page, spans, metrics) back into a
-    document: pages ascending, offsets re-sequenced. Mirrors the Spark-side
-    sorted collect_list reassembly so oracle == pipeline on mega-docs."""
-    page_results = sorted(page_results, key=lambda p: p[0])
-    out = []
-    for _page, spans, _m in page_results:
-        out.extend(spans)
-    metrics = merge_metrics([m for _p, _s, m in page_results])
-    spans, _ = finalize(out, new_metrics())
-    metrics["spans_out"] = len(spans)
-    return spans, metrics

@@ -95,8 +95,12 @@ def test_incremental_refuses_in_place_refresh(spark, corpora):
         )
 
 
-def test_incremental_noop_when_nothing_changed(spark, corpora):
-    from pdf_ocr_spark.extract.checkpoint import read_output
+def test_incremental_noop_when_nothing_changed(spark, corpora, monkeypatch):
+    """An unchanged corpus carries every doc from either writer's
+    snapshot (run_incremental's or run_resumable's), and none from a
+    snapshot whose ledger records other kernel sources."""
+    from pdf_ocr_spark.extract import checkpoint
+    from pdf_ocr_spark.extract.checkpoint import read_output, run_resumable
     from pdf_ocr_spark.extract.incremental import run_incremental
 
     a = spark.read.parquet(f"{corpora}/base")
@@ -110,14 +114,31 @@ def test_incremental_noop_when_nothing_changed(spark, corpora):
         read_output(spark, f"{corpora}/out3")
     ) == _spans_by_doc(read_output(spark, f"{corpora}/out1"))
 
+    n = a.count()
+    run_resumable(spark, a, f"{corpora}/res", n_buckets=4, chunk_buckets=2)
+    m = run_incremental(
+        spark, a, f"{corpora}/out_res", prev_dir=f"{corpora}/res"
+    )
+    assert m == {
+        "n_total": n, "n_reextracted": 0, "n_carried": n, "n_deleted": 0,
+    }
+
+    with monkeypatch.context() as mp:
+        mp.setattr(checkpoint, "kernel_version", lambda: "older-kernels")
+        run_incremental(spark, a, f"{corpora}/old")
+    m = run_incremental(
+        spark, a, f"{corpora}/out_old", prev_dir=f"{corpora}/old"
+    )
+    assert m["n_carried"] == 0 and m["n_reextracted"] == n, m
+
 
 def test_reused_out_dir_does_not_resurrect_deleted_buckets(
     spark, corpora
 ):
     """A full-snapshot rewrite into a previously used out_dir must not
-    keep stale bucket files (the session default is DYNAMIC partition
-    overwrite, which only replaces buckets present in the new data —
-    incremental.py forces static overwrite for its snapshot write)."""
+    keep stale bucket files (the snapshot write is a DYNAMIC partition
+    overwrite, which only replaces buckets present in the new data — a
+    refresh deletes the old snapshot before it writes)."""
     from pyspark.sql import functions as F
 
     from pdf_ocr_spark.extract.checkpoint import read_output
@@ -203,17 +224,15 @@ def test_refresh_write_is_hash_distributed(spark, tmp_path):
         assert len(files) == 1, (name, files)
 
 
-def test_corrupt_manifest_raises_and_releases_the_cache(spark, tmp_path):
-    """A missing manifest is a cold start; an unreadable one fails the
-    refresh loudly, and the failed refresh leaves nothing cached."""
-    from pdf_ocr_spark.extract.incremental import read_manifest, run_incremental
+def test_corrupt_ledger_raises_and_releases_the_cache(spark, tmp_path):
+    """A previous snapshot with an unreadable ledger fails the refresh
+    loudly, and the failed refresh leaves nothing cached."""
+    from pdf_ocr_spark.extract.incremental import run_incremental
     from pdf_ocr_spark.sources.synthetic import synthetic_corpus
 
-    assert read_manifest(spark, str(tmp_path / "none")) is None
-
     prev = tmp_path / "prev"
-    (prev / "_manifest").mkdir(parents=True)
-    (prev / "_manifest" / "part-0.parquet").write_bytes(b"junk")
+    (prev / "_progress").mkdir(parents=True)
+    (prev / "_progress" / "part-0.parquet").write_bytes(b"junk")
     spark.catalog.clearCache()
     with pytest.raises(Exception, match="part-0.parquet"):
         run_incremental(
@@ -226,13 +245,13 @@ def test_corrupt_manifest_raises_and_releases_the_cache(spark, tmp_path):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_refresh_killed_before_its_manifest_runs_the_next_refresh_cold(
+def test_refresh_killed_before_its_ledger_row_leaves_no_snapshot(
     spark, tmp_path, monkeypatch
 ):
-    """A refresh into a reused out_dir, killed after its data write and
-    before its manifest write, must not leave the older snapshot's
-    manifest beside the new data: a refresh from that directory would
-    then carry a deleted doc back. It finds no manifest and runs cold."""
+    """A refresh into a reused out_dir, killed after its data commit and
+    before its ledger row, leaves an incomplete snapshot: ``read_output``
+    refuses it, and a refresh from it runs cold instead of carrying a
+    deleted doc back."""
     from pyspark.sql import DataFrameWriter
 
     from pdf_ocr_spark.extract.checkpoint import read_output
@@ -251,16 +270,18 @@ def test_refresh_killed_before_its_manifest_runs_the_next_refresh_cold(
 
     parquet = DataFrameWriter.parquet
 
-    def killed_at_manifest(self, path, *args, **kwargs):
-        if path.endswith("/_manifest"):
-            raise RuntimeError("killed before the manifest write")
+    def killed_at_ledger(self, path, *args, **kwargs):
+        if path.endswith("/_progress"):
+            raise RuntimeError("killed before the ledger row")
         return parquet(self, path, *args, **kwargs)
 
     with monkeypatch.context() as m:
-        m.setattr(DataFrameWriter, "parquet", killed_at_manifest)
-        with pytest.raises(RuntimeError, match="killed before the manifest"):
+        m.setattr(DataFrameWriter, "parquet", killed_at_ledger)
+        with pytest.raises(RuntimeError, match="killed before the ledger"):
             run_incremental(spark, v2, a, prev_dir=b, n_buckets=4)
 
+    with pytest.raises(ValueError, match="no complete snapshot"):
+        read_output(spark, a)
     summary = run_incremental(spark, v1, c, prev_dir=a, n_buckets=4)
     got = [r["doc_id"] for r in read_output(spark, c).select("doc_id").collect()]
     assert len(got) == 24
@@ -268,3 +289,29 @@ def test_refresh_killed_before_its_manifest_runs_the_next_refresh_cold(
     assert summary == {
         "n_total": 24, "n_reextracted": 24, "n_carried": 0, "n_deleted": 0,
     }
+
+
+def test_fingerprint_tells_null_placements_apart(spark, tmp_path):
+    """Docs whose spans differ only in which field is NULL (or by a NULL
+    span) get different ``fp`` in the snapshot rows; the struct hash
+    ``xxhash64(spans)`` gives all three one value."""
+    from pdf_ocr_spark.extract.checkpoint import read_output, run_resumable
+    from pdf_ocr_spark.extract.incremental import input_fingerprint
+
+    nullable = (
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>"
+    )
+    df = spark.createDataFrame(
+        [
+            ("pdfish-000001", [(None, "x", None, 0)]),
+            ("pdfish-000002", [("x", None, None, 0)]),
+            ("pdfish-000003", [("x", None, None, 0), None]),
+        ],
+        nullable,
+    )
+    out = str(tmp_path / "out")
+    run_resumable(spark, df, out, n_buckets=2, chunk_buckets=2)
+    fps = {r.doc_id: r.fp for r in read_output(spark, out).collect()}
+    assert len(set(fps.values())) == 3, fps
+    assert fps == {r.doc_id: r.fp for r in input_fingerprint(df).collect()}

@@ -31,7 +31,7 @@ def test_job_end_to_end_and_resume(spark, tmp_path):
     import pytest
 
     from pdf_ocr_spark.extract.checkpoint import (
-        completed_buckets,
+        read_ledger,
         read_output,
         run_resumable,
     )
@@ -45,7 +45,7 @@ def test_job_end_to_end_and_resume(spark, tmp_path):
             spark, inp, out, n_buckets=8, chunk_buckets=2,
             fail_after_chunks=2,
         )
-    done_before = completed_buckets(spark, out)
+    done_before = {b for r in read_ledger(spark, out) for b in r.buckets}
     assert 0 < len(done_before) < 8
     docs_before = sum(
         r.docs for r in spark.read.parquet(f"{out}/_progress").collect()

@@ -64,30 +64,6 @@ def test_extraction_output_contract(doc_id):
     assert m["dropped"] == sum(m["drop_reasons"].values())
 
 
-@settings(max_examples=40, deadline=None, suppress_health_check=list(HealthCheck))
-@given(doc_id=_doc_ids.filter(lambda d: d.startswith("pdfish")))
-def test_page_split_equals_whole_doc(doc_id):
-    """Extracting page-by-page then reassembling equals whole-doc
-    extraction — the mega-doc fan-out correctness property."""
-    from pdf_ocr_spark.kernels.pdfish import (
-        extract_pdfish,
-        extract_pdfish_page_spans,
-        reassemble_pages,
-    )
-
-    spans = [tuple(s) for s in generate_doc(doc_id)]
-    whole, wm = extract_pdfish(list(spans))
-    pages: dict[int, list] = {}
-    for s in spans:
-        pages.setdefault(s[3] // 1_000_000, []).append(s)
-    parts = [
-        (pg, *extract_pdfish_page_spans(ps)) for pg, ps in pages.items()
-    ]
-    merged, mm = reassemble_pages([(pg, o, m) for pg, o, m in parts])
-    assert merged == whole
-    assert mm["dropped"] == wm["dropped"]
-
-
 # ---------------------------------------------------------- skyline
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st

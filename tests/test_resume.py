@@ -9,7 +9,7 @@ from pdf_ocr_spark.extract.checkpoint import (
     _bucketed,
     chunk_input,
     chunk_partitions,
-    completed_buckets,
+    read_ledger,
     read_output,
     run_resumable,
 )
@@ -38,8 +38,10 @@ def test_kill_and_resume(spark, tmp_path):
         run_resumable(
             spark, inp, out_dir, n_buckets=8, chunk_buckets=2, fail_after_chunks=1
         )
-    done_before = completed_buckets(spark, out_dir)
+    done_before = {b for r in read_ledger(spark, out_dir) for b in r.buckets}
     assert 0 < len(done_before) < 8
+    with pytest.raises(ValueError, match="no complete snapshot"):
+        read_output(spark, out_dir)
 
     # resume: must process ONLY the remaining buckets
     stats = run_resumable(spark, inp, out_dir, n_buckets=8, chunk_buckets=2)
@@ -61,6 +63,9 @@ def test_rerun_after_completion_is_noop(spark, tmp_path):
     stats = run_resumable(spark, inp, out_dir, n_buckets=4, chunk_buckets=4)
     assert stats["chunks_processed"] == 0
     assert stats["buckets_skipped"] == 4
+    # a rerun with another bucket count cannot reuse the ledger's buckets
+    with pytest.raises(ValueError, match="n_buckets other than"):
+        run_resumable(spark, inp, out_dir, n_buckets=8, chunk_buckets=4)
 
 
 @pytest.mark.spark
@@ -69,14 +74,14 @@ def test_ledger_probe_missing_partial_and_corrupt(spark, tmp_path):
     only) holds no buckets, and an unreadable ledger raises instead of
     passing for "nothing done yet"."""
     out_dir = str(tmp_path / "out")
-    assert completed_buckets(spark, out_dir) == set()
+    assert read_ledger(spark, out_dir) == []
 
     (tmp_path / "out" / "_progress" / "_temporary" / "0").mkdir(parents=True)
-    assert completed_buckets(spark, out_dir) == set()
+    assert read_ledger(spark, out_dir) == []
 
     (tmp_path / "out" / "_progress" / "part-0.parquet").write_bytes(b"junk")
     with pytest.raises(Exception, match="part-0.parquet"):
-        completed_buckets(spark, out_dir)
+        read_ledger(spark, out_dir)
 
 
 @pytest.mark.spark

@@ -16,8 +16,9 @@ The measured job is a REFRESH-WITH-COMPACTION over a mutated corpus:
   untimed  seed V1 output (cold-start run_incremental — also the
            warm-up: full extraction exercises every code path)
   timed    run_incremental(V2, prev=V1): fingerprint scan over the
-           FULL corpus, manifest diff join, kernels over the ~25%
-           changed slice, carried-forward semi join, bucketed write
+           FULL corpus, diff join against V1's fp column, kernels over
+           the ~25% changed slice, carried-forward join, bucketed write
+           and ledger row
            + compact_output(files_per_bucket=1): full-output rewrite
 Mutation is deterministic from xxhash64(doc_id): ~25% changed (one
 appended span), ~3% deleted, ~3% added — so the timed region mixes
